@@ -11,8 +11,9 @@ pipeline over a lake table of source-code repositories
   (``utils/db_transformers.py``) become native Catalyst expressions and
   Arrow-batched pandas UDFs (``functions.normalize``),
 * last-writer-wins dedup by LSN watermark — the reference's
-  window-function patch dedup (``utils/db_patch.py:60-87``) becomes a
-  two-phase (salted partial → final) window dedup (``operators.dedup``),
+  window-function patch dedup (``utils/db_patch.py:60-87``) becomes one
+  keyed ``max_by`` aggregate whose map-side partial aggregate collapses
+  hot keys before the shuffle (``operators.dedup``),
 * MERGE-style keyed upsert/delete apply with bucket-pruned partition
   overwrite (``operators.merge``),
 * an idempotent checkpoint manifest with per-partition lineage and

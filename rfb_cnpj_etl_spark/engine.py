@@ -7,7 +7,8 @@ One call = one resumable CDC replay::
     engine.replay(changelog_df, batch_size=100_000)
 
 Per micro-batch: filter the log to the LSN window → normalize (vectorized
-cleaners) → LWW dedup (salted when skewed) → bucket-pruned MERGE →
+cleaners) → LWW fold (one keyed aggregate; its map-side partial
+aggregate collapses hot keys) → bucket-pruned MERGE →
 atomically commit a manifest entry carrying lsn range, per-bucket row
 counts (per-partition lineage + metrics, the north_rule requirement) and
 schema version. Restart resumes after ``manifest.high_watermark()``;
@@ -133,7 +134,6 @@ class CdcEngine:
         manifest_path: str,
         keys: list[str] | None = None,
         buckets: int | None = None,
-        salt_buckets: int | None = None,
         normalize: Callable[[DataFrame], DataFrame] | None = default_normalize,
         registry: SchemaRegistry | None = None,
         merge_mode: str = "auto",
@@ -166,15 +166,6 @@ class CdcEngine:
             commit_protocol=commit_protocol,
             feed_preimages=feed_preimages,
         )
-        if salt_buckets is not None:
-            import warnings
-
-            warnings.warn(
-                "salt_buckets is deprecated and ignored: the hash-agg LWW "
-                "merge path collapses hot keys map-side (no salting needed)",
-                DeprecationWarning,
-                stacklevel=2,
-            )
         self.normalize = normalize
         self.registry = registry or SchemaRegistry(CHANGELOG_SCHEMA)
         #: per-batch write strategy: "cow" always rewrites touched
@@ -909,7 +900,7 @@ class CdcEngine:
 
         Cost model at 10^10 rows: one columnar scan of the fold input
         (net changes only — bounded by churn since the checkpoint, not
-        state size) plus one map-side-combining hash aggregate; NO
+        state size) plus one map-side-combining LWW aggregate; NO
         per-batch state copies are ever written, which is what makes
         every batch a readable snapshot for free. Correctness: each
         batch's feed is its net diff vs the pre-batch state

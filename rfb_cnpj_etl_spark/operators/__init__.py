@@ -1,1 +1,1 @@
-from . import audit, dedup, explode, merge, multimodal, similarity, skew  # noqa: F401
+from . import audit, dedup, explode, merge, multimodal, similarity  # noqa: F401

@@ -23,7 +23,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..schema import OP_DELETE, OP_UPSERT
-from .store import BucketedParquetStore
+from .store import (
+    BucketedParquetStore,
+    TouchedSetMismatchError,
+    parquet_footer_rows,
+)
 
 # ---------------------------------------------------------------------------
 # CDC dedup
@@ -106,17 +110,18 @@ def last_writer_wins_agg(
     lsn_col: str = "lsn",
     op_col: str | None = "op",
 ) -> DataFrame:
-    """LWW as a hash aggregate: ``max_by(row, (lsn, delete-priority))``
+    """LWW as an aggregate: ``max_by(row, (lsn, delete-priority))``
     per key.
 
-    Same result as :func:`last_writer_wins` but a fundamentally better
-    physical plan for the MERGE hot path: a hash aggregate instead of a
-    sort-based window — no per-partition sort, and Catalyst's map-side
-    partial aggregation collapses every key to ONE row per map task
-    before the shuffle. That partial-agg step is also the skew story:
-    a hot key (one repo = 50% of events) reduces map-side, so no
-    explicit salting is needed on this path (the two-phase salted
-    window remains for order-sensitive dedups like prioritized_dedup).
+    Same result as :func:`last_writer_wins`. Physical plan (checked
+    with ``explain()`` on pyspark 4.1): ``SortAggregate(partial_max_by)
+    → Exchange hashpartitioning(keys) → SortAggregate(max_by)``, with a
+    ``Sort`` under each aggregate — not a hash aggregate, because the
+    ``max_by`` buffer holds the string-carrying payload struct. What it
+    buys over the window is the partial aggregate: every key collapses
+    to ONE row per map task before the shuffle, so a hot key (one repo
+    = 50% of events) reduces map-side — the skew answer on this path,
+    with no salting.
     """
     prio = (
         F.when(F.col(op_col) == OP_DELETE, 1).otherwise(0)
@@ -127,35 +132,6 @@ def last_writer_wins_agg(
     payload = F.struct(*[F.col(c) for c in df.columns])
     winners = df.groupBy(*keys).agg(F.max_by(payload, order_key).alias("__row"))
     return winners.select(*[F.col(f"__row.{c}").alias(c) for c in df.columns])
-
-
-def last_writer_wins_salted(
-    df: DataFrame,
-    keys: list[str],
-    lsn_col: str = "lsn",
-    op_col: str | None = "op",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase skew-resistant LWW dedup (SURVEY §7.4.4, P7 analog).
-
-    A hot key (one repo = 50% of events) makes the plain window dedup a
-    single straggler task. Phase 1 partial-dedups within
-    ``(key, lsn % salt_buckets)`` — the hot key's rows split across
-    ``salt_buckets`` tasks, mirroring map-side partial aggregation.
-    Phase 2 runs the exact window over at most ``salt_buckets`` rows per
-    key. Same result as ``last_writer_wins`` (the max over group maxima
-    is the global max); ~1/salt_buckets the straggler size.
-    """
-    salted = df.withColumn(
-        "__salt", (F.col(lsn_col) % F.lit(salt_buckets)).cast("int")
-    )
-    w1 = Window.partitionBy(*keys, "__salt").orderBy(*_order_cols(lsn_col, op_col))
-    partial = (
-        salted.withColumn("__rn", F.row_number().over(w1))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__salt")
-    )
-    return last_writer_wins(partial, keys, lsn_col, op_col)
 
 
 # ---------------------------------------------------------------------------
@@ -513,48 +489,27 @@ class _LwwIndexStore(BucketedParquetStore):
         commit_protocol: str = "rename",
     ):
         self.fold_keys = fold_keys
-        self._row_est: dict[int, int] = {}
-        self._next_seq = 0
         super().__init__(
             spark, path, buckets, bucket_keys=bucket_keys,
             prefer_marker=True, commit_protocol=commit_protocol,
         )
-        self._load_lww_meta()
-
-    # -- meta: row estimates + seq counter ride the layout marker ------
-
-    def _load_lww_meta(self) -> None:
-        import json as _json
-        import os as _os
-
-        meta = _os.path.join(self.path, self.META_FILE)
-        if not _os.path.exists(meta):
-            return
-        with open(meta, encoding="utf-8") as f:
-            raw = _json.load(f)
-        self._row_est = {
-            int(k): int(v) for k, v in (raw.get("row_est") or {}).items()
-        }
-        self._next_seq = int(raw.get("next_seq", 0))
+        self._next_seq = int(self._read_marker().get("next_seq", 0))
 
     def _meta_payload(self) -> dict:
-        p = super()._meta_payload()
-        p["row_est"] = {str(b): n for b, n in self._row_est.items()}
         # seq lives in the BASE marker, not the delta marker: the delta
         # root is dropped on rebucket/compact and the counter must stay
         # monotonic across those (a reset would let old base rows
         # outrank fresh deltas).
-        p["next_seq"] = self._next_seq
-        return p
+        return {**super()._meta_payload(), "next_seq": self._next_seq}
 
     def allocate_seq(self) -> int:
         """Next delta-vintage sequence (persisted before use; a crash
         after the bump burns a number, which is harmless)."""
-        import os as _os
+        import os
 
         seq = self._next_seq
         self._next_seq = seq + 1
-        _os.makedirs(self.path, exist_ok=True)
+        os.makedirs(self.path, exist_ok=True)
         self._write_meta()
         return seq
 
@@ -569,51 +524,6 @@ class _LwwIndexStore(BucketedParquetStore):
                 F.col(self.SEQ_COL).cast("long"), F.lit(default).cast("long")
             ),
         )
-
-    def rebucket(self, new_buckets: int) -> dict:
-        """Generic layout migration plus row-estimate reseed: the
-        estimates are keyed by bucket id, which a rebucket invalidates
-        (StateTable.rebucket does the same). Without the reseed the
-        auto COW/MOR ingest decision would sum stale buckets' counts."""
-        res = super().rebucket(new_buckets)
-        # a bucket absent from the rewrite's counts is KNOWN-empty
-        # after a full-table rewrite — record the 0 (a missing entry
-        # reads as "untracked" and forces the conservative COW path)
-        counts = {int(b): int(n) for b, n in res["bucket_rows"].items()}
-        self._row_est = {b: counts.get(b, 0) for b in range(new_buckets)}
-        self._write_meta()
-        return res
-
-    def compact(
-        self,
-        target_files_per_bucket: int = 1,
-        split_col=None,
-        bucket_ids: list[int] | None = None,
-        sort_within_buckets: list[str] | None = None,
-    ) -> dict:
-        """Compaction plus row-estimate reseed (StateTable.compact's
-        twin). MOR appends only ever GROW the estimates (delete
-        tombstones count as +rows); after delete-heavy churn the fold
-        shrinks the base, so without the reseed the auto COW/MOR
-        decision keeps comparing batches against inflated totals."""
-        res = super().compact(
-            target_files_per_bucket,
-            split_col=split_col,
-            bucket_ids=bucket_ids,
-            sort_within_buckets=sort_within_buckets,
-        )
-        if res["compacted_buckets"]:
-            import os as _os
-
-            from .store import parquet_footer_rows
-
-            for b in res["bucket_ids"]:
-                d = f"{self.path}/bucket={b}"
-                self._row_est[b] = (
-                    parquet_footer_rows(d) if _os.path.isdir(d) else 0
-                )
-            self._write_meta()
-        return res
 
     # -- merge-on-read fold --------------------------------------------
 
@@ -848,24 +758,7 @@ class MinhashIndex:
             r["b"] for r in df.select(bucket_col.alias("b")).distinct().collect()
         )
 
-    @staticmethod
-    def _staged_bytes(staging: str) -> int:
-        import os
-
-        total = 0
-        for root, _dirs, files in os.walk(staging):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-
     # -- write path ------------------------------------------------------
-
-    #: auto ingest mode appends deltas iff the batch's changed ids are
-    #: ≤ ratio × (estimated rows in the touched sig buckets) — the same
-    #: knob as StateTable.MOR_ROW_RATIO.
-    MOR_ROW_RATIO = 0.25
-    #: a bucket already holding this many delta files forces a folding
-    #: COW ingest (bounds what every read must merge).
-    DELTA_FILES_CAP = 32
 
     def ingest(
         self,
@@ -902,8 +795,12 @@ class MinhashIndex:
           spread ids over any B touches every bucket and rewrites the
           whole index to apply a sliver of it.
         * ``"auto"`` — MOR iff the batch is small relative to the
-          touched sig buckets' row estimates and no bucket has hit the
-          delta-file cap.
+          touched sig buckets' row estimates and no touched bucket of
+          either store has hit the delta-file cap
+          (:meth:`BucketedParquetStore.choose_mode`). ``batch_rows``
+          (any upper bound on the changed-id count — the engine
+          forwards its replay probe's free per-window row count) skips
+          the count job this decision otherwise runs.
 
         MOR crash ordering: the posting delta is appended BEFORE the
         signature delta. Vacated-key tombstones are derived from the
@@ -983,8 +880,11 @@ class MinhashIndex:
             self._post_bucket(),
         )
 
-        if self._resolve_ingest_mode(
-            mode, changed, touched_sig, touched_post, batch_rows
+        if self.sig_store.choose_mode(
+            mode,
+            changed.count if batch_rows is None else batch_rows,
+            touched_sig,
+            siblings=[(self.post_store, touched_post)],
         ) == "mor":
             metrics = self._ingest_mor(
                 new_sigs, deleted, touched_sig, touched_post,
@@ -1014,11 +914,9 @@ class MinhashIndex:
                     n = int(obs.get["n"])
                 except Exception:  # noqa: BLE001
                     # AQE empty-relation propagation can eliminate the
-                    # CollectMetrics node (StateTable._obs_counts has
-                    # the same fallback); footer-only count of what was
-                    # just written — no data scan (the pairs output is a
-                    # flat parquet dir, not bucket-partitioned).
-                    n = self._parquet_rows(pairs_out)
+                    # CollectMetrics node; footer-only count of what was
+                    # just written — no data scan.
+                    n = parquet_footer_rows(pairs_out)
                 metrics["pairs"] = n
                 metrics["pairs_path"] = pairs_out
                 pairs = self.spark.read.parquet(pairs_out)
@@ -1034,79 +932,23 @@ class MinhashIndex:
         shutil.rmtree(snap, ignore_errors=True)
         return metrics, pairs
 
-    def _resolve_ingest_mode(
-        self,
-        mode: str,
-        changed: DataFrame,
-        touched_sig: list[int],
-        touched_post: list[int],
-        batch_rows: int | None = None,
-    ) -> str:
-        """COW vs MOR for one index batch (StateTable._resolve_mode's
-        twin). Auto = MOR iff the sig store exists, every touched
-        bucket has a row estimate, the batch is small relative to them,
-        and no TOUCHED bucket of either store has hit the delta-file
-        cap — touched-only exactly like StateTable._resolve_mode: a
-        capped bucket this batch never touches cannot degrade this
-        batch's reads, and the forced COW would not clear it anyway
-        (COW rewrites only touched buckets), so a global check would
-        disable MOR permanently after any one bucket ever capped.
-        ``batch_rows`` (any upper bound on the changed-id count — the
-        engine forwards its replay probe's free per-window row count)
-        skips the count job this decision otherwise runs per batch."""
-        if mode == "cow" or not self.sig_store.exists():
-            return "cow"
-        if mode == "mor":
-            return "mor"
-        if not touched_sig:
-            return "cow"
-        est = [self.sig_store._row_est.get(b) for b in touched_sig]
-        if any(e is None for e in est):
-            return "cow"  # untracked layout (legacy store) → populate via COW
-        total = sum(est)
-        n = batch_rows if batch_rows is not None else changed.count()
-        if total == 0 or n > self.MOR_ROW_RATIO * total:
-            return "cow"
-        sig_d = self.sig_store.delta_file_counts()
-        if any(sig_d.get(b, 0) >= self.DELTA_FILES_CAP for b in touched_sig):
-            return "cow"
-        post_d = self.post_store.delta_file_counts()
-        if any(post_d.get(b, 0) >= self.DELTA_FILES_CAP for b in touched_post):
-            return "cow"
-        return "mor"
-
-    @staticmethod
-    def _staged_rows(staging: str) -> dict[int, int]:
-        """Row counts per staged bucket, footer-only (pyarrow metadata
-        — no Spark job); feeds the sig store's row estimates."""
-        import os
-
-        out: dict[int, int] = {}
-        if not os.path.isdir(staging):
-            return out
-        for d in os.listdir(staging):
-            if d.startswith("bucket="):
-                out[int(d.split("=", 1)[1])] = MinhashIndex._parquet_rows(
-                    os.path.join(staging, d)
-                )
+    def _write_metrics(self, sig: dict, post: dict) -> dict:
+        """Index metrics from both stores' shared write metrics — one
+        definition for the COW and MOR paths."""
+        out = {
+            "mode": sig["mode"],
+            "sig_touched_buckets": len(sig["touched_buckets"]),
+            "post_touched_buckets": len(post["touched_buckets"]),
+            "buckets": self.buckets,
+            "sig_buckets": self.sig_store.buckets,
+            "post_buckets": self.post_store.buckets,
+            "sig_bytes_written": sig["bytes_written"],
+            "post_bytes_written": post["bytes_written"],
+        }
+        if "delta_files" in sig:
+            out["sig_delta_files"] = sig["delta_files"]
+            out["post_delta_files"] = post["delta_files"]
         return out
-
-    @staticmethod
-    def _parquet_rows(path: str) -> int:
-        """Total rows of a flat (non-bucket-partitioned) parquet dir,
-        footer-only — no Spark job."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for fname in files:
-                if fname.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, fname)
-                    ).metadata.num_rows
-        return total
 
     def _ingest_cow(
         self,
@@ -1127,6 +969,7 @@ class MinhashIndex:
         import json
         import os
         import shutil
+        import uuid
 
         SEQ = _LwwIndexStore.SEQ_COL
         seq_sig = self.sig_store.allocate_seq()
@@ -1142,20 +985,12 @@ class MinhashIndex:
             )
         else:
             merged_sig = new_with_bucket
-        sig_staging = f"{self.sig_store.path}.staging"
-        staged_sig = self.sig_store.stage_write(merged_sig, sig_staging)
-        if set(staged_sig) - set(touched_sig):
-            shutil.rmtree(sig_staging, ignore_errors=True)
-            raise RuntimeError(
-                f"sig staging produced buckets {sorted(set(staged_sig) - set(touched_sig))} "
-                f"outside the changed-id bucket set {touched_sig}"
-            )
+        sig_w = self.sig_store.stage_cow(merged_sig, touched_sig)
 
         # ---- stage the posting store ((band,bkey)-bucket pruned) -------
-        post_bucket = self._post_bucket()
-        new_post = new_banded.withColumn("bucket", post_bucket).withColumn(
-            SEQ, F.lit(seq_post).cast("long")
-        )
+        new_post = new_banded.withColumn(
+            "bucket", self._post_bucket()
+        ).withColumn(SEQ, F.lit(seq_post).cast("long"))
         if self.post_store.exists():
             cur_post = self.post_store.with_seq(
                 self.post_store.read_buckets(touched_post)
@@ -1165,58 +1000,29 @@ class MinhashIndex:
             )
         else:
             merged_post = new_post
-        post_staging = f"{self.post_store.path}.staging"
-        staged_post = self.post_store.stage_write(merged_post, post_staging)
-        if set(staged_post) - set(touched_post):
-            shutil.rmtree(sig_staging, ignore_errors=True)
-            shutil.rmtree(post_staging, ignore_errors=True)
-            raise RuntimeError(
-                f"posting staging produced buckets "
-                f"{sorted(set(staged_post) - set(touched_post))} outside "
-                f"the touched set {touched_post}"
-            )
-
-        metrics = {
-            "mode": "cow",
-            "sig_touched_buckets": len(touched_sig),
-            "post_touched_buckets": len(touched_post),
-            "buckets": self.buckets,
-            "sig_buckets": self.sig_store.buckets,
-            "post_buckets": self.post_store.buckets,
-            "sig_bytes_written": self._staged_bytes(sig_staging),
-            "post_bytes_written": self._staged_bytes(post_staging),
-        }
-
-        # exact row estimates for the rewritten buckets (advisory — the
-        # auto COW/MOR decision only; commit_staged persists them with
-        # the layout marker it writes anyway)
-        sig_rows = self._staged_rows(sig_staging)
-        for b in touched_sig:
-            self.sig_store._row_est[b] = sig_rows.get(b, 0)
+        try:
+            post_w = self.post_store.stage_cow(merged_post, touched_post)
+        except TouchedSetMismatchError:
+            shutil.rmtree(sig_w.staging, ignore_errors=True)
+            raise
 
         # ---- journal, then commit both stores --------------------------
         # per-store commit tokens ride the journal so a pointer-protocol
         # redo re-copies to the SAME immutable names (idempotent)
-        import uuid as _uuid
-
-        sig_token = _uuid.uuid4().hex[:12]
-        post_token = _uuid.uuid4().hex[:12]
+        staged = [
+            ("sig", self.sig_store, sig_w, uuid.uuid4().hex[:12]),
+            ("post", self.post_store, post_w, uuid.uuid4().hex[:12]),
+        ]
         journal = {
             "stores": [
                 {
-                    "store": "sig",
-                    "staging": sig_staging,
-                    "touched": touched_sig,
-                    "staged": staged_sig,
-                    "token": sig_token,
-                },
-                {
-                    "store": "post",
-                    "staging": post_staging,
-                    "touched": touched_post,
-                    "staged": staged_post,
-                    "token": post_token,
-                },
+                    "store": name,
+                    "staging": w.staging,
+                    "touched": w.touched,
+                    "staged": w.staged,
+                    "token": token,
+                }
+                for name, _store, w, token in staged
             ]
         }
         jp = self._journal_path()
@@ -1224,19 +1030,13 @@ class MinhashIndex:
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump(journal, f)
         os.replace(tmp, jp)
-        self.sig_store.commit_staged(
-            sig_staging, touched_sig, staged=staged_sig, token=sig_token
-        )
-        self.post_store.commit_staged(
-            post_staging, touched_post, staged=staged_post, token=post_token
-        )
-        # touched deltas were folded into the rewritten base by the
-        # staging reads; drop their files (a crash before this leaves
-        # already-folded rows that lose the seq-LWW to the base)
-        self.sig_store.clear_delta_buckets(touched_sig)
-        self.post_store.clear_delta_buckets(touched_post)
+        for _name, store, w, token in staged:
+            store.commit_cow(w, token=token)
         os.remove(jp)
-        return metrics
+        return self._write_metrics(
+            self.sig_store.write_metrics(sig_w, "cow"),
+            self.post_store.write_metrics(post_w, "cow"),
+        )
 
     def _ingest_mor(
         self,
@@ -1255,8 +1055,6 @@ class MinhashIndex:
         (``old_banded``, read by ingest() before any write), which a
         crash-replay can only re-derive while the sig store is still
         unmodified."""
-        import shutil
-
         SEQ = _LwwIndexStore.SEQ_COL
         OP = _LwwIndexStore.OP_COL
         seq_sig = self.sig_store.allocate_seq()
@@ -1279,20 +1077,7 @@ class MinhashIndex:
             .withColumn(SEQ, F.lit(seq_post).cast("long"))
             .withColumn("bucket", self._post_bucket())
         )
-        post_staging = f"{self.post_store.path}.delta_staging"
-        staged_post = self.post_store.stage_write(
-            post_delta.repartition(max(len(touched_post), 1), "bucket"),
-            post_staging,
-        )
-        if set(staged_post) - set(touched_post):
-            shutil.rmtree(post_staging, ignore_errors=True)
-            raise RuntimeError(
-                f"posting delta staged buckets "
-                f"{sorted(set(staged_post) - set(touched_post))} outside "
-                f"the touched set {touched_post}"
-            )
-        post_bytes = self._staged_bytes(post_staging)
-        post_files = self.post_store.append_delta(post_staging, staged_post)
+        post = self.post_store.append_mor(post_delta, touched_post)
 
         # ---- signature delta: upserts + deleted-id tombstones ----------
         sig_delta = new_sigs.select("id", "sig").withColumn(
@@ -1306,39 +1091,8 @@ class MinhashIndex:
         sig_delta = sig_delta.withColumn(
             SEQ, F.lit(seq_sig).cast("long")
         ).withColumn("bucket", self._sig_bucket())
-        sig_staging = f"{self.sig_store.path}.delta_staging"
-        staged_sig = self.sig_store.stage_write(
-            sig_delta.repartition(max(len(touched_sig), 1), "bucket"),
-            sig_staging,
-        )
-        if set(staged_sig) - set(touched_sig):
-            shutil.rmtree(sig_staging, ignore_errors=True)
-            raise RuntimeError(
-                f"sig delta staged buckets "
-                f"{sorted(set(staged_sig) - set(touched_sig))} outside "
-                f"the changed-id bucket set {touched_sig}"
-            )
-        sig_rows = self._staged_rows(sig_staging)
-        sig_bytes = self._staged_bytes(sig_staging)
-        sig_files = self.sig_store.append_delta(sig_staging, staged_sig)
-        # appended winners as an upper-bound estimate (tombstones incl.)
-        for b, n in sig_rows.items():
-            self.sig_store._row_est[b] = self.sig_store._row_est.get(b, 0) + n
-        self.sig_store._write_meta()
-
-        metrics = {
-            "mode": "mor",
-            "sig_touched_buckets": len(staged_sig),
-            "post_touched_buckets": len(staged_post),
-            "buckets": self.buckets,
-            "sig_buckets": self.sig_store.buckets,
-            "post_buckets": self.post_store.buckets,
-            "sig_bytes_written": sig_bytes,
-            "post_bytes_written": post_bytes,
-            "sig_delta_files": sig_files,
-            "post_delta_files": post_files,
-        }
-        return metrics
+        sig = self.sig_store.append_mor(sig_delta, touched_sig)
+        return self._write_metrics(sig, post)
 
     def update(
         self,

@@ -281,9 +281,10 @@ class IncrementalAggregate:
         Direct calls keep their batch ids exact (``fold_ids=None`` —
         folding an unverified id would mark earlier unapplied batches
         applied), so a caller that ONLY ever refreshes directly grows
-        the applied record by one id per call; any later
-        :meth:`advance` re-bounds it by folding every manifest-verified
-        id into the watermarks. ``fold_ids`` is advance/seed's verified
+        the applied record by one id per call; the next
+        :meth:`advance` that applies new batches re-bounds it by folding
+        every manifest-verified id into the watermarks (an advance with
+        nothing pending returns early and leaves the record as is). ``fold_ids`` is advance/seed's verified
         committed set (see :meth:`_merge_applied`).
         """
         self._recover()

@@ -11,8 +11,8 @@ plan is the scalable parquet fallback:
 1. the state table is partitioned by ``bucket = pmod(xxhash64(keys), B)``
    (the Iceberg ``bucket(B, key)`` transform analog);
 2. a micro-batch only touches the buckets its keys hash to → read just
-   those partitions (partition-pruned scan), union with the batch
-   winners, window-dedup by (key, lsn), and rewrite ONLY those buckets;
+   those partitions (partition-pruned scan), union with the batch,
+   LWW-fold by (key, lsn), and rewrite ONLY those buckets;
 3. the rewrite goes to a hidden staging dir first, then bucket dirs are
    swapped into place — the reference's ``.part`` + ``os.replace``
    atomic-rename pattern (``cnpj_downloader.py:67,116,169``) applied to
@@ -24,10 +24,11 @@ Write amplification is bounded by touched-buckets/B of the table, not
 the whole table. At 100 TB you raise B so a bucket ≈ a few GB; the
 algorithm is unchanged.
 
-The layout/swap/recovery machinery is factored into
-:class:`BucketedParquetStore` so other engine stores (the incremental
-MinHash index's signature and posting stores, operators/dedup.py) ride
-the exact same crash-safety protocol instead of reinventing it.
+The layout/swap/recovery machinery and the COW/MOR write path are
+factored into :class:`BucketedParquetStore` so other engine stores (the
+incremental MinHash index's signature and posting stores,
+operators/dedup.py) ride the exact same crash-safety protocol instead of
+reinventing it.
 """
 
 from __future__ import annotations
@@ -36,7 +37,7 @@ import json
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import CODE_KEY, OP_DELETE, OP_UPSERT
@@ -45,17 +46,11 @@ from .dedup import last_writer_wins_agg
 
 from .store import (  # noqa: F401  (re-exported for compatibility)
     BucketedParquetStore,
+    TouchedSetMismatchError,
     key_bucket,
     parquet_footer_rows,
     path_health,
 )
-
-
-class TouchedSetMismatchError(RuntimeError):
-    """A merge wrote rows into buckets outside the precomputed touched
-    set (the probe and merge saw differently-normalized keys). Raised
-    BEFORE any state swap — the state table is guaranteed unchanged."""
-
 
 class StateTable(BucketedParquetStore):
     """A bucket-partitioned parquet table with MERGE apply.
@@ -82,16 +77,9 @@ class StateTable(BucketedParquetStore):
     touched-state-rows ratio (the reference's batch-ratio knob,
     ``config.py:31-34``, turned into a data-dependent decision), with a
     per-bucket delta-file cap forcing a folding COW batch before reads
-    degrade.
+    degrade — :meth:`BucketedParquetStore.choose_mode`, shared with the
+    MinHash index stores.
     """
-
-    #: auto mode appends a delta iff batch_rows ≤ ratio × (estimated
-    #: rows already in the touched buckets) — bigger batches amortize a
-    #: rewrite; smaller ones shouldn't pay O(touched corpus).
-    MOR_ROW_RATIO = 0.25
-    #: a touched bucket already holding this many delta files forces a
-    #: folding COW batch (bounds what every read must merge).
-    DELTA_FILES_CAP = 32
 
     def __init__(
         self,
@@ -123,35 +111,17 @@ class StateTable(BucketedParquetStore):
             bucket_keys=self.keys,
             commit_protocol=commit_protocol,
         )
-        #: estimated current rows per bucket (exact after a COW rewrite
-        #: of the bucket; += appended winners for MOR batches — an upper
-        #: bound). Drives the auto COW/MOR decision; persisted in the
-        #: layout marker. Advisory only: never used for correctness.
-        self._row_est: dict[int, int] = self._load_row_est()
-
-    def _load_row_est(self) -> dict[int, int]:
-        import json as _json
-
-        meta = os.path.join(self.path, self.META_FILE)
-        if not os.path.exists(meta):
-            return {}
-        with open(meta, encoding="utf-8") as f:
-            raw = _json.load(f).get("row_est") or {}
-        return {int(k): int(v) for k, v in raw.items()}
 
     def _meta_payload(self) -> dict:
-        return {
-            **super()._meta_payload(),
-            "keys": self.keys,
-            "row_est": {str(b): n for b, n in self._row_est.items()},
-        }
+        return {**super()._meta_payload(), "keys": self.keys}
 
     # -- merge-on-read fold ---------------------------------------------
 
     def _fold_delta(self, base: DataFrame | None, delta: DataFrame) -> DataFrame:
-        """Base ∪ delta → current rows: ONE hash-agg LWW by (key, lsn)
-        with delete-tombstone filtering — the exact dedup the COW merge
-        runs, applied at read time. ``allowMissingColumns`` carries
+        """Base ∪ delta → current rows: ONE LWW aggregate by (key, lsn)
+        with delete-tombstone filtering — the exact fold the COW merge
+        runs, applied at read time (plan: see
+        :func:`last_writer_wins_agg`). ``allowMissingColumns`` carries
         add-column schema evolution across base/delta vintages (older
         rows read NULL for columns added later)."""
         if base is not None:
@@ -196,17 +166,11 @@ class StateTable(BucketedParquetStore):
             for r in batch.select(bucket_col.alias("bucket")).distinct().collect()
         )
 
-    #: above this many touched buckets, per-bucket observe() metrics
-    #: (one conditional sum per bucket) get bulky — fall back to a
-    #: footer-only count job (parquet aggregate pushdown).
-    OBSERVE_METRICS_MAX_BUCKETS = 256
-
     def merge(
         self,
         batch: DataFrame,
         lsn_col: str | None = None,
         op_col: str | None = None,
-        salt_buckets: int | None = None,
         touched: list[int] | None = None,
         mode: str = "auto",
         batch_rows: int | None = None,
@@ -224,13 +188,13 @@ class StateTable(BucketedParquetStore):
               WHEN NOT MATCHED AND op<>'delete' THEN INSERT *
 
         LWW-by-LSN is associative, so state ∪ batch needs only ONE
-        keyed dedup (``salt_buckets`` is deprecated: the hash-agg LWW
-        collapses hot keys map-side — SURVEY P7's skew answer is free
-        here). ``touched`` can be precomputed for all batches in a
+        keyed LWW aggregate, whose map-side partial aggregate collapses
+        hot keys before the shuffle (SURVEY P7's skew answer — no
+        salting). ``touched`` can be precomputed for all batches in a
         single upfront pass (CdcEngine.replay does), stored sha256 is
         reused so only new winners hash, and the per-bucket manifest
-        metrics ride the write job as observed metrics instead of a
-        follow-up count.
+        metrics come from the staged files' parquet footers instead of
+        a follow-up count job.
 
         ``mode``: ``"cow"`` rewrites the touched buckets (bulk path),
         ``"mor"`` appends the batch winners as delta files (small-churn
@@ -255,15 +219,6 @@ class StateTable(BucketedParquetStore):
         be unique per batch (the engine uses ``batch=<batch_id>``);
         see :meth:`_emit_changes` for the exactly-once crash contract.
         """
-        if salt_buckets is not None:
-            import warnings
-
-            warnings.warn(
-                "salt_buckets is deprecated and ignored: the hash-agg LWW "
-                "path collapses hot keys map-side before the shuffle",
-                DeprecationWarning,
-                stacklevel=2,
-            )
         if mode not in ("auto", "cow", "mor"):
             raise ValueError(f"unknown merge mode {mode!r}")
         lsn_col = lsn_col or self.lsn_col
@@ -284,10 +239,16 @@ class StateTable(BucketedParquetStore):
                 incoming, lsn_col, op_col, touched, changes_out
             )
         try:
-            if self._resolve_mode(mode, batch_rows, touched) == "mor":
-                res = self._merge_mor(incoming, lsn_col, op_col, touched)
+            if self.choose_mode(mode, batch_rows, touched) == "mor":
+                res = self.append_mor(
+                    self._mor_rows(incoming, lsn_col, op_col), touched
+                )
             else:
-                res = self._merge_cow(incoming, lsn_col, op_col, touched)
+                w = self.stage_cow(
+                    self._cow_rows(incoming, lsn_col, op_col, touched), touched
+                )
+                self.commit_cow(w)
+                res = self.write_metrics(w, "cow")
         except TouchedSetMismatchError:
             # the feed just published above was diffed against a
             # pre-image read from the SAME wrong touched set (keys in
@@ -302,30 +263,6 @@ class StateTable(BucketedParquetStore):
             raise
         res.update(feed_metrics)
         return res
-
-    def _resolve_mode(
-        self, mode: str, batch_rows: int | None, touched: list[int]
-    ) -> str:
-        """COW vs MOR for one batch. Auto = MOR iff the store exists,
-        every touched bucket has a row estimate, the batch is small
-        relative to them (< MOR_ROW_RATIO), and no touched bucket has
-        hit the delta-file cap (then a COW batch folds it)."""
-        if mode == "cow" or not self.exists():
-            return "cow"
-        if mode == "mor":
-            return "mor"
-        if batch_rows is None:
-            return "cow"
-        est = [self._row_est.get(b) for b in touched]
-        if any(v is None for v in est):
-            return "cow"  # untracked layout (legacy store) → populate via COW
-        total = sum(est)
-        if total == 0 or batch_rows > self.MOR_ROW_RATIO * total:
-            return "cow"
-        dcounts = self.delta_file_counts()
-        if any(dcounts.get(b, 0) >= self.DELTA_FILES_CAP for b in touched):
-            return "cow"
-        return "mor"
 
     # -- CDC-out change feed ---------------------------------------------
 
@@ -545,115 +482,43 @@ class StateTable(BucketedParquetStore):
         os.rename(staging, out_dir)  # atomic publish = the feed commit
         return {"change_rows": rows}
 
-    def _observe_bucket_counts(self, df: DataFrame, touched: list[int]):
-        """Attach per-bucket row counters to ride the write job (V4
-        progress metering with zero extra scans); returns (df, obs) with
-        obs None past the bulky-metrics bound."""
-        if len(touched) > self.OBSERVE_METRICS_MAX_BUCKETS:
-            return df, None
-        from pyspark.sql import Observation
+    # -- rows for the shared write path ----------------------------------
 
-        obs = Observation()
-        df = df.observe(
-            obs,
-            *[
-                F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).alias(f"b{b}")
-                for b in touched
-            ],
-        )
-        return df, obs
-
-    @staticmethod
-    def _obs_counts(obs) -> dict[int, int] | None:
-        """Observed per-bucket counts, or None when AQE empty-relation
-        propagation eliminated the CollectMetrics node (e.g. every key
-        deleted) — callers fall back to a footer-only count."""
-        if obs is None:
-            return None
-        try:
-            return {int(k[1:]): int(v) for k, v in obs.get.items() if v and v > 0}
-        except Exception:  # noqa: BLE001
-            return None
-
-    @staticmethod
-    def _dir_bytes(path: str) -> int:
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total
-
-    def _merge_mor(
-        self, incoming: DataFrame, lsn_col: str, op_col: str, touched: list[int]
-    ) -> dict:
-        """Append the batch's LWW winners — delete tombstones included —
-        as per-bucket delta files: write I/O is O(batch), never
-        O(touched corpus). Winners are deterministic from the batch, so
-        a crash-replay appends identical rows that the read-time fold
-        collapses (idempotent without a manifest-side guard)."""
+    def _mor_rows(
+        self, incoming: DataFrame, lsn_col: str, op_col: str
+    ) -> DataFrame:
+        """The batch's LWW winners — delete tombstones included — as
+        delta rows. Deterministic from the batch, so a crash-replay
+        appends identical rows that the read-time fold collapses
+        (idempotent without a manifest-side guard)."""
         winners = last_writer_wins_agg(incoming, self.keys, lsn_col, op_col)
         sha = F.sha2(F.col(self.content_col).cast("string"), 256)
         if "content_sha256" in winners.columns:
             sha = F.coalesce(F.col("content_sha256"), sha)
-        winners = winners.withColumn(
+        return winners.withColumn(
             "content_sha256",
             F.when(F.col(op_col) != OP_DELETE, sha),  # tombstones: NULL
         )
-        winners, obs = self._observe_bucket_counts(winners, touched)
-        staging = f"{self.path}.delta_staging"
-        staged = self.stage_write(
-            winners.repartition(len(touched), "bucket"), staging
-        )
-        unexpected = sorted(set(staged) - set(touched))
-        if unexpected:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise TouchedSetMismatchError(
-                f"merge produced rows in buckets {unexpected} outside the "
-                f"precomputed touched set {sorted(touched)}; the touched-"
-                "bucket probe must run on keys normalized identically to "
-                "the merged batch (state table left unchanged)"
-            )
-        bytes_written = self._dir_bytes(staging)
-        files = self.append_delta(staging, staged)
-        counts = self._obs_counts(obs)
-        if counts is None:
-            # rare fallback (see _obs_counts): recompute the tiny winner
-            # counts — deterministic, and only the counts job, not the data.
-            counts = {
-                int(r["bucket"]): int(r["n"])
-                for r in winners.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-        for b, n in counts.items():
-            self._row_est[b] = self._row_est.get(b, 0) + n
-        self._write_meta()
-        return {
-            "touched_buckets": touched,
-            "bucket_rows": counts,
-            "rows": int(sum(counts.values())),
-            "buckets": self.buckets,
-            "mode": "mor",
-            "bytes_written": bytes_written,
-            "delta_files": files,
-        }
 
-    def _merge_cow(
+    def _cow_rows(
         self, incoming: DataFrame, lsn_col: str, op_col: str, touched: list[int]
-    ) -> dict:
+    ) -> DataFrame:
+        """The touched buckets' new contents: current rows ∪ batch,
+        LWW-folded, deletes dropped. One LWW aggregate (plan: see
+        :func:`last_writer_wins_agg`) — its map-side partial aggregate
+        is also the hot-key skew answer (a hot key collapses to one row
+        per map task before the shuffle)."""
         if self.exists():
             # state keeps its stored content_sha256; the batch side gets
-            # NULL (allowMissingColumns) and hashes post-dedup.
+            # NULL (allowMissingColumns) and hashes post-fold.
             current = self.read_buckets(touched).withColumn(op_col, F.lit(OP_UPSERT))
             merged = current.unionByName(incoming, allowMissingColumns=True)
         else:
             merged = incoming.withColumn(
                 "content_sha256", F.lit(None).cast("string")
             )
-        # Hash-aggregate LWW (max_by): no sort, map-side partial agg —
-        # which is also the hot-key skew answer (a hot key collapses to
-        # one row per map task before the shuffle).
         final = last_writer_wins_agg(merged, self.keys, lsn_col, op_col)
-        final = (
+        return (
             final.filter(F.col(op_col) != OP_DELETE)
             .drop(op_col)
             .withColumn(
@@ -664,148 +529,6 @@ class StateTable(BucketedParquetStore):
                 ),
             )
         )
-
-        # Per-bucket row metrics observed inside the write job — no
-        # follow-up count job (V4 progress metering without extra scans).
-        final, obs = self._observe_bucket_counts(final, touched)
-
-        # stage → swap (atomic per bucket dir, commit point = manifest).
-        # Repartition on the partition column first (Iceberg
-        # write.distribution-mode=hash analog): without it every write
-        # task emits a file per bucket it holds — tasks × buckets tiny
-        # files per batch; with it, one task and one file per bucket.
-        # |touched| partitions, not B: a 2-bucket batch must not schedule
-        # B−2 empty write tasks (two buckets hashing to one partition
-        # still come out as one file each — partitionBy splits them).
-        staging = f"{self.path}.staging"
-        staged = self.stage_write(
-            final.repartition(len(touched), "bucket"), staging
-        )
-
-        # Fail-loud invariant: every bucket dir the write produced must be
-        # in `touched`. A violation means the bucket probe and merge() saw
-        # different keys (e.g. a normalization applied after the probe) —
-        # swapping would silently lose the unexpected buckets' rows AND
-        # the state scan above missed those buckets. Raising here, before
-        # any swap, leaves the state table untouched.
-        unexpected = sorted(set(staged) - set(touched))
-        if unexpected:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise TouchedSetMismatchError(
-                f"merge produced rows in buckets {unexpected} outside the "
-                f"precomputed touched set {sorted(touched)}; the touched-"
-                "bucket probe must run on keys normalized identically to "
-                "the merged batch (state table left unchanged)"
-            )
-
-        bytes_written = self._dir_bytes(staging)
-        counts = self._obs_counts(obs)
-        if counts is not None:
-            # refresh the row estimates BEFORE the commit writes the
-            # layout marker, so the marker carries them for free
-            for b in touched:
-                if counts.get(b, 0) > 0:
-                    self._row_est[b] = counts[b]
-                else:
-                    self._row_est.pop(b, None)
-        self.commit_staged(staging, touched, staged=staged)
-        # a COW rewrite of a bucket folds its deltas into the new base —
-        # drop them (crash before this: stale deltas are LWW no-ops)
-        self.clear_delta_buckets(touched)
-
-        if counts is None:
-            # AQE-eliminated metrics node (see _obs_counts): footer-only
-            # count job over the rewritten buckets (aggregate pushdown).
-            remaining = [
-                b for b in touched if os.path.isdir(f"{self.path}/bucket={b}")
-            ]
-            counts = (
-                {
-                    int(r["bucket"]): int(r["rows"])
-                    for r in self.read_buckets(remaining)
-                    .groupBy("bucket")
-                    .agg(F.count("*").alias("rows"))
-                    .collect()
-                }
-                if remaining
-                else {}
-            )
-            for b in touched:
-                if counts.get(b, 0) > 0:
-                    self._row_est[b] = counts[b]
-                else:
-                    self._row_est.pop(b, None)
-            self._write_meta()
-        return {
-            "touched_buckets": touched,
-            "bucket_rows": counts,
-            "rows": int(sum(counts.values())),
-            "buckets": self.buckets,
-            "mode": "cow",
-            "bytes_written": bytes_written,
-        }
-
-    # -- layout evolution (reference index pass analog, S11) ------------
-
-    def rebucket(self, new_buckets: int) -> dict:
-        """B → B′ layout migration — the generic
-        :meth:`BucketedParquetStore.rebucket` protocol (``bucket_keys``
-        = the MERGE keys), which also folds any merge-on-read deltas
-        into the new base. The per-bucket counts it collects seed the
-        row estimates the auto COW/MOR decision runs on."""
-        res = super().rebucket(new_buckets)
-        # buckets absent from the rewrite's counts are KNOWN-empty after
-        # a full-table rewrite — record the 0 (a missing entry reads as
-        # "untracked" and forces the conservative COW path)
-        counts = dict(res["bucket_rows"])
-        self._row_est = {b: counts.get(b, 0) for b in range(new_buckets)}
-        self._write_meta()
-        return res
-
-    def compact(
-        self,
-        target_files_per_bucket: int = 1,
-        bucket_ids: list[int] | None = None,
-        sort_within_buckets: list[str] | None = None,
-    ) -> dict:
-        """Per-bucket small-file compaction — see the base class (which
-        also folds merge-on-read deltas into the rewritten base and,
-        with ``bucket_ids``, rewrites ONLY the offending buckets —
-        maintenance stays O(offending), never O(table)). The >1-files
-        split hash must be seeded INDEPENDENTLY of key_bucket:
-        xxhash64(keys) % files is fully determined by xxhash64(keys) %
-        buckets whenever files divides buckets."""
-        split = None
-        if target_files_per_bucket > 1:
-            split = F.pmod(
-                F.xxhash64(*[F.col(k) for k in self.keys], F.lit(0x5EED)),
-                F.lit(target_files_per_bucket),
-            )
-        res = super().compact(
-            target_files_per_bucket,
-            split_col=split,
-            bucket_ids=bucket_ids,
-            sort_within_buckets=sort_within_buckets,
-        )
-        if res["compacted_buckets"]:
-            # post-fold base is the whole truth for the rewritten
-            # buckets → exact row estimates via footer-only pyarrow
-            # counts (no Spark job). A compaction can empty a bucket
-            # outright (every key tombstoned in deltas) — record the
-            # explicit zero (an absent key means "untracked" and forces
-            # the conservative COW path, which the fold just proved
-            # unnecessary). A FULL compaction that emptied the whole
-            # table zeroes every bucket.
-            if bucket_ids is None and not self.exists():
-                self._row_est = {b: 0 for b in range(self.buckets)}
-            else:
-                for b in res["bucket_ids"]:
-                    d = f"{self.path}/bucket={b}"
-                    self._row_est[b] = (
-                        parquet_footer_rows(d) if os.path.isdir(d) else 0
-                    )
-            self._write_meta()
-        return res
 
     # -- audits (reference S10/S12 analogs) -----------------------------
 

@@ -47,6 +47,8 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,8 +61,7 @@ def key_bucket(keys: list[str], buckets: int) -> Column:
 
 def parquet_footer_rows(path: str) -> int:
     """Total rows under ``path`` from parquet footers only (pyarrow
-    metadata — no Spark job). Subclasses reseed their per-bucket row
-    estimates from this after compaction/rebucket."""
+    metadata — no Spark job)."""
     import pyarrow.parquet as pq
 
     total = 0
@@ -73,18 +74,83 @@ def parquet_footer_rows(path: str) -> int:
     return total
 
 
+def dir_bytes(path: str) -> int:
+    """Bytes of every file under ``path`` (0 for a missing path)."""
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _dirs, files in os.walk(path)
+        for f in files
+    )
+
+
+def _bucket_ids(root: str) -> list[int]:
+    """Bucket ids of the ``bucket=<i>`` dirs directly under ``root``."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(root)
+        if d.startswith("bucket=") and not d.endswith(".old")
+    )
+
+
+class TouchedSetMismatchError(RuntimeError):
+    """A staged write holds rows in buckets outside the precomputed
+    touched set (the probe and the write saw differently-normalized
+    keys). Raised BEFORE any swap or append, with the staging dir
+    removed — the store is guaranteed unchanged."""
+
+
+@dataclass
+class StagedWrite:
+    """A per-bucket write sitting in a staging dir, not yet published:
+    the buckets it covers (``touched``), the bucket dirs it holds
+    (``staged`` ⊆ touched), their rows from parquet footers and the
+    bytes written."""
+
+    staging: str
+    touched: list[int]
+    staged: list[int]
+    bucket_rows: dict[int, int]
+    bytes_written: int
+
+    @classmethod
+    def of(cls, staging: str, touched: list[int]) -> "StagedWrite":
+        staged = _bucket_ids(staging)
+        return cls(
+            staging,
+            touched,
+            staged,
+            {b: parquet_footer_rows(f"{staging}/bucket={b}") for b in staged},
+            dir_bytes(staging),
+        )
+
+
 class BucketedParquetStore:
     """Shared machinery for bucket-partitioned parquet stores.
 
     Layout: ``{path}/bucket=<i>/part-*.parquet`` plus a ``_table_meta``
     layout marker. Provides: crash recovery for interrupted swaps,
-    rename-aside bucket swaps, partition-pruned reads, staged writes,
-    small-file compaction and a metadata-only health report.
+    rename-aside bucket swaps, partition-pruned reads, small-file
+    compaction, a metadata-only health report — and the ONE write path
+    every bucketed store uses:
 
-    :class:`StateTable` (the CDC MERGE target) and the MinHash index's
-    signature/posting stores (operators/dedup.py) all subclass this, so
-    every persistent store in the engine has ONE swap protocol and ONE
-    recovery story.
+    * :meth:`choose_mode` — the per-batch copy-on-write vs
+      merge-on-read decision, from per-bucket row estimates that ride
+      the layout marker (exact after a COW rewrite, compaction or
+      rebucket; += appended rows after a MOR append);
+    * :meth:`stage_cow` + :meth:`commit_cow` — rewrite the touched
+      buckets whole (a caller committing several stores together
+      journals the :class:`StagedWrite` in between);
+    * :meth:`append_mor` — append the batch as per-bucket delta files,
+      folded at read time by the subclass's :meth:`_fold_delta`.
+
+    Both stage through :meth:`stage_write`, whose touched-set guard
+    raises :class:`TouchedSetMismatchError` before anything is
+    published. :class:`StateTable` (the CDC MERGE target) and the
+    MinHash index's signature/posting stores (operators/dedup.py) all
+    subclass this, so every persistent store in the engine has ONE swap
+    protocol, ONE write path and ONE recovery story.
     """
 
     #: layout marker colocated with the data ("_"-prefixed → invisible
@@ -99,6 +165,14 @@ class BucketedParquetStore:
     #: (which folds them into the new base first) a mismatching marker
     #: identifies the leftovers as already-folded garbage.
     DELTA_META = "_delta_meta.json"
+
+    #: auto mode appends a delta iff batch_rows ≤ ratio × (estimated
+    #: rows already in the touched buckets) — bigger batches amortize a
+    #: rewrite; smaller ones shouldn't pay O(touched corpus).
+    MOR_ROW_RATIO = 0.25
+    #: a touched bucket already holding this many delta files forces a
+    #: folding COW batch (bounds what every read must merge).
+    DELTA_FILES_CAP = 32
 
     def __init__(
         self,
@@ -135,6 +209,13 @@ class BucketedParquetStore:
         #: names; anything on disk it does not reference is garbage.
         self._live: dict[int, list[str]] = {
             int(b): list(fs) for b, fs in (stored.get("live") or {}).items()
+        }
+        #: estimated current rows per bucket — advisory, drives only
+        #: :meth:`choose_mode`; never used for correctness. A missing
+        #: bucket reads as "untracked" (legacy store, or a crash between
+        #: a rebucket swap and its reseed) and keeps auto mode on COW.
+        self._row_est: dict[int, int] = {
+            int(b): int(n) for b, n in (stored.get("row_est") or {}).items()
         }
         self._recover()
         marker = stored.get("buckets")
@@ -188,6 +269,7 @@ class BucketedParquetStore:
         payload: dict = {
             "buckets": self.buckets,
             "protocol": self.commit_protocol,
+            "row_est": {str(b): n for b, n in self._row_est.items()},
         }
         if self.commit_protocol == "pointer":
             payload["live"] = {str(b): fs for b, fs in self._live.items()}
@@ -209,7 +291,7 @@ class BucketedParquetStore:
         payload: a rebucket invalidates their bucket keying, and the
         marker staged with the new layout must not carry OLD-keyed but
         valid-looking estimates through the crash window between the
-        directory swap and the subclass's post-rebucket reseed (a
+        directory swap and the post-rebucket reseed (a
         reopen there should read "untracked" and take the conservative
         COW path until reseeded)."""
         payload = self._meta_payload()
@@ -332,16 +414,7 @@ class BucketedParquetStore:
         map's keys; rename: the bucket dirs)."""
         if self.commit_protocol == "pointer":
             return sorted(self._live)
-        return self._bucket_dirs(self.path)
-
-    def _bucket_dirs(self, root: str) -> list[int]:
-        if not os.path.isdir(root):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(root)
-            if d.startswith("bucket=") and not d.endswith(".old")
-        )
+        return _bucket_ids(self.path)
 
     def _live_files(self, bucket_ids: list[int]) -> list[str]:
         return [
@@ -422,7 +495,7 @@ class BucketedParquetStore:
         """Bucket ids that currently hold delta files."""
         return [
             b
-            for b in self._bucket_dirs(self.delta_root)
+            for b in _bucket_ids(self.delta_root)
             if any(
                 e.endswith(".parquet")
                 for e in os.listdir(f"{self.delta_root}/bucket={b}")
@@ -436,7 +509,7 @@ class BucketedParquetStore:
                 for e in os.listdir(f"{self.delta_root}/bucket={b}")
                 if e.endswith(".parquet")
             )
-            for b in self._bucket_dirs(self.delta_root)
+            for b in _bucket_ids(self.delta_root)
         }
 
     def _read_delta(self, bucket_ids: list[int] | None = None) -> DataFrame:
@@ -499,32 +572,126 @@ class BucketedParquetStore:
         no-ops)."""
         for b in bucket_ids:
             shutil.rmtree(f"{self.delta_root}/bucket={b}", ignore_errors=True)
-        if not self._bucket_dirs(self.delta_root):
+        if not _bucket_ids(self.delta_root):
             shutil.rmtree(self.delta_root, ignore_errors=True)
 
     # -- staged write + swap --------------------------------------------
 
-    def stage_write(self, df: DataFrame, staging: str) -> list[int]:
-        """Write ``df`` (already carrying a ``bucket`` column and
-        repartitioned by the caller) into a fresh staging dir; returns
-        the staged bucket ids. No live data is touched."""
+    def choose_mode(
+        self,
+        mode: str,
+        batch_rows: int | Callable[[], int] | None,
+        touched: list[int],
+        siblings: list[tuple["BucketedParquetStore", list[int]]] = (),
+    ) -> str:
+        """COW vs MOR for one batch. ``"auto"`` = MOR iff the store
+        exists, every touched bucket has a row estimate, the batch is
+        small relative to them (≤ MOR_ROW_RATIO) and no touched bucket —
+        here or in a ``siblings`` store written by the same batch — has
+        hit DELTA_FILES_CAP (then a COW batch folds it). Touched-only: a
+        capped bucket the batch never touches cannot degrade its reads,
+        and the forced COW could not clear it anyway.
+
+        ``batch_rows`` is any upper bound on the batch's rows, or a
+        callable computing it (run only when the decision needs it);
+        None keeps auto mode on COW."""
+        if mode == "cow" or not self.exists():
+            return "cow"
+        if mode == "mor":
+            return "mor"
+        est = [self._row_est.get(b) for b in touched]
+        if not touched or None in est:
+            return "cow"  # untracked layout (legacy store) → populate via COW
+        total = sum(est)
+        n = batch_rows() if callable(batch_rows) else batch_rows
+        if total == 0 or n is None or n > self.MOR_ROW_RATIO * total:
+            return "cow"
+        for store, t in [(self, touched), *siblings]:
+            counts = store.delta_file_counts()
+            if any(counts.get(b, 0) >= store.DELTA_FILES_CAP for b in t):
+                return "cow"
+        return "mor"
+
+    def stage_write(
+        self, df: DataFrame, staging: str, touched: list[int]
+    ) -> StagedWrite:
+        """Write ``df`` (carrying a ``bucket`` column) into a fresh
+        staging dir. No live data is touched.
+
+        Repartitioned on the partition column first (Iceberg
+        write.distribution-mode=hash analog): without it every write
+        task emits a file per bucket it holds — tasks × buckets tiny
+        files; with it, one task and one file per bucket. |touched|
+        partitions, not B: a 2-bucket batch must not schedule B−2 empty
+        write tasks (two buckets hashing to one partition still come
+        out as one file each — partitionBy splits them).
+
+        Fail-loud guard: every staged bucket must be in ``touched``. A
+        violation means the bucket probe and the write saw different
+        keys (e.g. a normalization applied after the probe) — publishing
+        would silently lose the unexpected buckets' rows, and the
+        caller's pruned read missed them. The staging is removed and
+        :class:`TouchedSetMismatchError` raised before any swap."""
         if os.path.isdir(staging):
             shutil.rmtree(staging)
-        df.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith("bucket=")
-        )
+        df.repartition(max(len(touched), 1), "bucket").write.mode(
+            "overwrite"
+        ).partitionBy("bucket").parquet(staging)
+        w = StagedWrite.of(staging, touched)
+        unexpected = sorted(set(w.staged) - set(touched))
+        if unexpected:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise TouchedSetMismatchError(
+                f"write to {self.path} produced rows in buckets "
+                f"{unexpected} outside the precomputed touched set "
+                f"{sorted(touched)}; the touched-bucket probe must run on "
+                "keys normalized identically to the written rows (store "
+                "left unchanged)"
+            )
+        return w
 
-    def _staged_bucket_ids(self, staging: str) -> list[int]:
-        if not os.path.isdir(staging):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(staging)
-            if d.startswith("bucket=")
-        )
+    def stage_cow(self, rows: DataFrame, touched: list[int]) -> StagedWrite:
+        """Stage a copy-on-write batch: ``rows`` are the touched
+        buckets' complete new contents (a touched bucket with no rows
+        empties out). Nothing is published until :meth:`commit_cow`."""
+        return self.stage_write(rows, f"{self.path}.staging", touched)
+
+    def commit_cow(self, w: StagedWrite, token: str | None = None) -> None:
+        """Publish a staged rewrite (:meth:`commit_staged`, redo-safe)
+        with exact row estimates for the rewritten buckets riding the
+        marker it writes, then drop the touched buckets' deltas — the
+        rewrite folded them (a crash before that leaves already-folded
+        rows the next fold resolves as LWW no-ops)."""
+        for b in w.touched:
+            self._row_est[b] = w.bucket_rows.get(b, 0)
+        self.commit_staged(w.staging, w.touched, staged=w.staged, token=token)
+        self.clear_delta_buckets(w.touched)
+
+    def append_mor(self, rows: DataFrame, touched: list[int]) -> dict:
+        """Merge-on-read batch: stage ``rows`` (the batch's winners,
+        delete tombstones included) and append them as per-bucket delta
+        files — O(batch) write I/O, no base rewrite. The appended rows
+        are added to the row estimates (an upper bound: tombstones
+        count). Returns :meth:`write_metrics` plus ``delta_files``."""
+        w = self.stage_write(rows, f"{self.path}.delta_staging", touched)
+        files = self.append_delta(w.staging, w.staged)
+        for b, n in w.bucket_rows.items():
+            self._row_est[b] = self._row_est.get(b, 0) + n
+        self._write_meta()
+        return {**self.write_metrics(w, "mor"), "delta_files": files}
+
+    def write_metrics(self, w: StagedWrite, mode: str) -> dict:
+        """Manifest metrics of one write. ``bucket_rows`` counts the
+        rows written per bucket: a COW bucket's total, a MOR batch's
+        appended rows (``mode`` says which reading applies)."""
+        return {
+            "touched_buckets": w.touched,
+            "bucket_rows": w.bucket_rows,
+            "rows": int(sum(w.bucket_rows.values())),
+            "buckets": self.buckets,
+            "mode": mode,
+            "bytes_written": w.bytes_written,
+        }
 
     def commit_staged(
         self,
@@ -557,7 +724,7 @@ class BucketedParquetStore:
         names — a no-op (sources outlive the commit: staging is dropped
         last). A fully-dropped staging means the commit completed."""
         if staged is None:
-            staged = self._staged_bucket_ids(staging)
+            staged = _bucket_ids(staging)
         os.makedirs(self.path, exist_ok=True)
         if self.commit_protocol == "rename":
             staged_set = set(staged)
@@ -611,7 +778,6 @@ class BucketedParquetStore:
     def compact(
         self,
         target_files_per_bucket: int = 1,
-        split_col: Column | None = None,
         bucket_ids: list[int] | None = None,
         sort_within_buckets: list[str] | None = None,
     ) -> dict:
@@ -638,10 +804,16 @@ class BucketedParquetStore:
         The sort satisfies the writer's required partition-column
         ordering (bucket is the prefix), so no extra sort is inserted.
 
-        ``split_col`` is required for >1 file per bucket (subclasses
-        supply a deterministic second partition key — see
-        StateTable.compact); repartitioning on the bucket value alone
-        maps each bucket to exactly one output file."""
+        More than one file per bucket needs a deterministic second
+        partition key (a nondeterministic split can lose rows on task
+        retry): a hash of ``bucket_keys`` seeded INDEPENDENTLY of
+        :func:`key_bucket` — xxhash64(keys) % files is fully determined
+        by xxhash64(keys) % buckets whenever files divides buckets.
+
+        The rewritten buckets' row estimates become exact (footer
+        counts of the staged files); a FULL compaction proves every
+        other bucket empty and records the zero (an absent estimate
+        would force the conservative COW path)."""
         all_ids = sorted(
             set(self.base_bucket_ids()) | set(self.delta_bucket_ids())
         )
@@ -660,36 +832,30 @@ class BucketedParquetStore:
             shutil.rmtree(staging)
         df = self.read_buckets(bucket_ids)
         if target_files_per_bucket > 1:
-            if split_col is None:
-                raise ValueError(
-                    "target_files_per_bucket > 1 needs a deterministic "
-                    "split_col (a nondeterministic split can lose rows on "
-                    "task retry)"
-                )
+            self.bucket_col()  # fails loudly without bucket_keys
+            split = F.pmod(
+                F.xxhash64(*map(F.col, self.bucket_keys), F.lit(0x5EED)),
+                F.lit(target_files_per_bucket),
+            )
             df = df.repartition(
                 len(bucket_ids) * target_files_per_bucket,
                 F.col("bucket"),
-                split_col,
+                split,
             )
         else:
             df = df.repartition(len(bucket_ids), "bucket")
         if sort_within_buckets:
             df = df.sortWithinPartitions("bucket", *sort_within_buckets)
         df.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        bytes_written = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _dirs, files in os.walk(staging)
-            for f in files
-        )
-        self.commit_staged(staging, bucket_ids)
-        # deltas are folded into the rewritten base; a crash before this
-        # cleanup leaves already-folded rows the next fold LWW-no-ops.
-        self.clear_delta_buckets(bucket_ids)
+        w = StagedWrite.of(staging, bucket_ids)
+        if bucket_ids == all_ids:
+            self._row_est = {b: 0 for b in range(self.buckets)}
+        self.commit_cow(w)
         return {
             "compacted_buckets": len(bucket_ids),
             "buckets": self.buckets,
             "bucket_ids": bucket_ids,
-            "bytes_written": bytes_written,
+            "bytes_written": w.bytes_written,
         }
 
     def rebucket(self, new_buckets: int) -> dict:
@@ -729,15 +895,11 @@ class BucketedParquetStore:
             .partitionBy("bucket")
             .parquet(staging)
         )
-        # per-bucket counts (≤ B′ ints on the driver) — footer-only via
-        # parquet aggregate pushdown; StateTable seeds its row tracking
-        # for the merge-mode heuristic from these.
+        # per-bucket counts (≤ B′ ints, parquet footers — no Spark
+        # job): the exact row estimates of the new layout
         bucket_rows = {
-            int(r["bucket"]): int(r["n"])
-            for r in self.spark.read.parquet(staging)
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+            b: parquet_footer_rows(f"{staging}/bucket={b}")
+            for b in _bucket_ids(staging)
         }
         if self.commit_protocol == "pointer":
             # the staged marker must reference the staged files: on a
@@ -750,7 +912,7 @@ class BucketedParquetStore:
                     for e in os.listdir(f"{staging}/bucket={b}")
                     if e.endswith(".parquet")
                 )
-                for b in self._staged_bucket_ids(staging)
+                for b in _bucket_ids(staging)
             }
         # The new-layout marker is written INTO staging so it rides the
         # atomic rename below: a crash between the two os.replace calls
@@ -760,9 +922,9 @@ class BucketedParquetStore:
         # manifest and a later merge would mix hash moduli, letting
         # stale versions escape LWW). fresh_layout: the staged marker
         # must NOT carry row estimates still keyed by OLD bucket ids —
-        # a crash before the subclass's post-rebucket reseed would
-        # otherwise reopen with wrong-keyed but valid-looking estimates
-        # feeding the COW/MOR decision.
+        # a crash before the post-swap reseed below would otherwise
+        # reopen with wrong-keyed but valid-looking estimates feeding
+        # the COW/MOR decision.
         self._write_meta(into=staging, buckets=new_buckets, fresh_layout=True)
         # Whole-table rename-aside swap. Crash between the two renames
         # leaves the intact pre-rebucket table in {path}.old, which
@@ -777,9 +939,10 @@ class BucketedParquetStore:
         os.replace(self.path, old)
         os.replace(staging, self.path)
         self.buckets = new_buckets
-        # refresh = the staged marker's content (still estimate-free;
-        # subclasses reseed and write the full payload right after)
-        self._write_meta(fresh_layout=True)
+        # reseed: a bucket absent from the full rewrite is KNOWN-empty —
+        # record the 0 (a missing entry reads as "untracked")
+        self._row_est = {b: bucket_rows.get(b, 0) for b in range(new_buckets)}
+        self._write_meta()
         shutil.rmtree(old, ignore_errors=True)
         # deltas were folded into the new base by the read() above; the
         # crash window between the swap and this clear is covered by the

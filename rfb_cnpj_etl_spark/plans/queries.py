@@ -40,9 +40,9 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def cdc_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full LWW replay result: M2 dedup with the CDC total order (lsn
-    DESC, delete wins ties), deletes applied. Uses the hash-aggregate
-    max_by formulation (the MERGE hot path): one keyed exchange, no
-    sort, map-side partial agg collapses hot keys — same rows as the
+    DESC, delete wins ties), deletes applied. Uses the max_by aggregate
+    formulation (the MERGE hot path): one keyed exchange, and the
+    map-side partial aggregate collapses hot keys — same rows as the
     row_number window the oracle spells."""
     log = changelog_from_events(spark, sf_dir)
     winners = D.last_writer_wins_agg(log, ["repo", "path"])

@@ -36,23 +36,6 @@ class TestLastWriterWins:
         out = D.last_writer_wins(df, ["repo", "path"]).collect()
         assert len(out) == 1 and out[0]["op"] == "delete"
 
-    def test_salted_equals_plain(self, spark):
-        rows = [
-            ("hot", "p", f"v{i}", i, "delete" if i % 7 == 0 else "upsert")
-            for i in range(200)
-        ] + [("cold", f"p{i}", f"c{i}", 1000 + i, "upsert") for i in range(20)]
-        df = log_df(spark, rows)
-        plain = {
-            tuple(r) for r in D.last_writer_wins(df, ["repo", "path"]).collect()
-        }
-        salted = {
-            tuple(r)
-            for r in D.last_writer_wins_salted(
-                df, ["repo", "path"], salt_buckets=8
-            ).collect()
-        }
-        assert plain == salted
-
 
 class TestFirstWriterWins:
     def test_insert_or_ignore_intent(self, spark):

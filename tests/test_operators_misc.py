@@ -1,9 +1,8 @@
-"""Explode (T7), audits (S10/S12), skew tooling (P7), schema registry."""
+"""Explode (T7), audits (S10/S12), schema registry."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rfb_cnpj_etl_spark.operators.audit import (
@@ -13,11 +12,6 @@ from rfb_cnpj_etl_spark.operators.audit import (
     row_count_reconciliation,
 )
 from rfb_cnpj_etl_spark.operators.explode import explode_delimited
-from rfb_cnpj_etl_spark.operators.skew import (
-    hot_keys,
-    partition_histogram,
-    salted_repartition,
-)
 from rfb_cnpj_etl_spark.schema import CHANGELOG_SCHEMA, SchemaRegistry
 
 
@@ -56,26 +50,6 @@ class TestAudits:
         assert row_count_reconciliation(df, 100)["ok"]
         assert not row_count_reconciliation(df, 99)["ok"]
         assert row_count_reconciliation(df, 99, tolerance=0.02)["ok"]
-
-
-class TestSkew:
-    def test_hot_keys_detects(self, spark):
-        rows = [("hot",)] * 80 + [(f"k{i}",) for i in range(20)]
-        df = spark.createDataFrame(rows, "k string")
-        hk = hot_keys(df, ["k"], threshold_fraction=0.5)
-        assert [r["k"] for r in hk.collect()] == ["hot"]
-
-    def test_salted_repartition_spreads_hot_key(self, spark):
-        rows = [("hot", i) for i in range(400)] + [(f"k{i}", i) for i in range(40)]
-        df = spark.createDataFrame(rows, "repo string, lsn long")
-        plain = df.repartition(8, F.col("repo"))
-        salted = salted_repartition(df, ["repo"], buckets=8, num_partitions=8)
-        pmax = max(r["rows"] for r in partition_histogram(plain).collect())
-        smax = max(r["rows"] for r in partition_histogram(salted).collect())
-        # hot key alone is 400 rows in one partition unsalted; salted
-        # should cut the max partition size at least in half
-        assert pmax >= 400
-        assert smax <= pmax / 2
 
 
 class TestSchemaRegistry:

@@ -6,11 +6,11 @@
 * selective per-bucket compaction (compact only the offending buckets —
   the last O(table) cost on the steady-state path);
 * index auto-MOR delta-cap check aligned to touched-buckets-only
-  (matching StateTable._resolve_mode);
+  (matching the state table's decision);
 * within-bucket sort order for parquet min/max data skipping;
 * posting-skew surfaced by maintenance with a max_fanout recommendation;
 * rebucket staging marker carries no stale-keyed row estimates (ADVICE);
-* _LwwIndexStore.compact reseeds row estimates (ADVICE);
+* index-store compaction reseeds row estimates (ADVICE);
 * CLI posting_skew no longer silently creates an index (ADVICE).
 """
 
@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from rfb_cnpj_etl_spark.operators.dedup import MinhashIndex
 from rfb_cnpj_etl_spark.operators.merge import StateTable
+from rfb_cnpj_etl_spark.operators.store import BucketedParquetStore
 
 BASE_TEXT = (
     "the quick brown fox jumps over the lazy dog while seventeen "
@@ -276,7 +277,7 @@ class TestIndexCapTouchedOnly:
         rewrites only touched buckets, so it could never clear the
         capped one — pre-fix the index's global check disabled MOR
         permanently)."""
-        monkeypatch.setattr(MinhashIndex, "DELTA_FILES_CAP", 2)
+        monkeypatch.setattr(BucketedParquetStore, "DELTA_FILES_CAP", 2)
         idx = MinhashIndex(
             spark, str(tmp_path / "idx"), k=2, num_hashes=16, bands=4,
             buckets=64,
@@ -294,7 +295,7 @@ class TestIndexCapTouchedOnly:
         capped_sig = {
             b
             for b, v in idx.sig_store.delta_file_counts().items()
-            if v >= MinhashIndex.DELTA_FILES_CAP
+            if v >= BucketedParquetStore.DELTA_FILES_CAP
         }
         assert capped_sig  # the hot doc's sig bucket hit the cap
         hot_post = {
@@ -337,7 +338,7 @@ class TestIndexCapTouchedOnly:
 
 
 # ---------------------------------------------------------------------------
-# _LwwIndexStore.compact reseeds row estimates (ADVICE)
+# Index-store compaction reseeds row estimates (ADVICE)
 # ---------------------------------------------------------------------------
 
 
@@ -374,20 +375,27 @@ class TestIndexCompactReseedsEstimates:
 
 class TestRebucketMarkerFresh:
     def test_crash_before_reseed_reads_untracked(self, spark, tmp_table_dir):
-        """A crash between the generic rebucket's directory swap and the
-        subclass's estimate reseed must reopen as 'untracked' (→
-        conservative COW), not with wrong-keyed but valid-looking
-        estimates feeding the COW/MOR decision."""
+        """A crash between the rebucket's directory swap and its
+        estimate reseed must reopen as 'untracked' (→ conservative COW),
+        not with wrong-keyed but valid-looking estimates feeding the
+        COW/MOR decision."""
         import json as _json
-
-        from rfb_cnpj_etl_spark.operators.store import BucketedParquetStore
 
         st = StateTable(spark, tmp_table_dir, buckets=4)
         st.merge(log_df(spark, seed_rows(40)))
         assert st._row_est
-        # crash simulation: ONLY the generic layout migration runs (the
-        # StateTable reseed that normally follows never happens)
-        BucketedParquetStore.rebucket(st, 8)
+        # crash simulation: the process dies at the post-swap reseed's
+        # marker write (the only live-dir marker write a rebucket makes)
+        orig = st._write_meta
+
+        def crash_on_reseed(into=None, buckets=None, fresh_layout=False):
+            if into is None:
+                raise RuntimeError("crash before the post-swap reseed")
+            return orig(into=into, buckets=buckets, fresh_layout=fresh_layout)
+
+        st._write_meta = crash_on_reseed
+        with pytest.raises(RuntimeError, match="post-swap reseed"):
+            st.rebucket(8)
         with open(os.path.join(tmp_table_dir, StateTable.META_FILE)) as f:
             meta = _json.load(f)
         assert meta["buckets"] == 8
