@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .operators.feed import ChangeFeed, prune_oldest
 from .operators.merge import StateTable
 from .plans.checkpoint import Manifest
 from .schema import CHANGELOG_SCHEMA, CODE_KEY, OP_DELETE, SchemaRegistry
@@ -178,6 +179,10 @@ class CdcEngine:
         #: Change-Data-Feed analog, making the state table itself
         #: consumable as a changelog by a downstream pipeline.
         self.changes_dir = changes_dir
+        # opening the feed sweeps legacy staging dirs
+        self._feed = (
+            ChangeFeed(spark, changes_dir, self.manifest) if changes_dir else None
+        )
 
     #: (window, bucket) probe rows the driver will hold at once before
     #: switching to the streamed per-partition fetch (65536 rows of 4
@@ -228,11 +233,7 @@ class CdcEngine:
             touched=touched,
             mode=self.merge_mode,
             batch_rows=batch_rows,
-            changes_out=(
-                os.path.join(self.changes_dir, f"batch={batch_id}")
-                if self.changes_dir
-                else None
-            ),
+            changes_out=self.feed.batch_dir(batch_id) if self.changes_dir else None,
         )
         entry = {
             "batch_id": batch_id,
@@ -555,28 +556,18 @@ class CdcEngine:
                     }
                 )
 
-        if self.changes_dir and policy.feed_checkpoint_every is not None:
-            # checkpoint cadence: merge batches committed since the
-            # newest published checkpoint (all of history when none
-            # exists yet). Checkpointing the NEWEST batch reads the live
-            # state directly — one scan, no feed fold — and must run
-            # before the retention prune below so the prune's
-            # covered-dirs-only rule has a fresh horizon to work under.
-            ids = [e["batch_id"] for e in self._merge_entries()]
-            cps = self._feed_checkpoints()
-            newest_cp = max(
-                (i for i, b in enumerate(ids) if b in cps), default=-1
-            )
-            if ids and len(ids) - 1 - newest_cp >= policy.feed_checkpoint_every:
-                res = self.checkpoint_feed()
-                actions.append(
-                    {"store": "change_feed", "action": "checkpoint", **res}
-                )
+        # checkpoint before the retention prune, so the prune's
+        # covered-dirs-only rule has a fresh horizon to work under
+        if (
+            self.changes_dir
+            and policy.feed_checkpoint_every is not None
+            and self.feed.checkpoint_due(policy.feed_checkpoint_every)
+        ):
+            res = self.checkpoint_feed()
+            actions.append({"store": "change_feed", "action": "checkpoint", **res})
 
         if self.changes_dir and policy.changes_retention_batches is not None:
-            pruned = self._prune_change_feed(
-                policy.changes_retention_batches
-            )
+            pruned = self.feed.prune(policy.changes_retention_batches)
             if pruned:
                 actions.append(
                     {
@@ -608,80 +599,9 @@ class CdcEngine:
         under ``{index}/pairs/``. Their counts are in the manifest and
         the data is re-derivable from the index, so this is garbage
         collection, not state loss."""
-        import os
-
         if retention is None:
             return 0
-        return CdcEngine._prune_batch_dirs(
-            os.path.join(index.path, "pairs"), retention
-        )
-
-    def _prune_change_feed(self, retention: int) -> int:
-        """Count-based feed retention, made time-travel-safe once a
-        snapshot checkpoint exists: only batch dirs the NEWEST
-        checkpoint covers (manifest position ≤ the checkpoint's) are
-        eligible for pruning — removing an uncovered dir would destroy
-        ``state_as_of`` for every later batch. Without a checkpoint the
-        behavior is the original opt-in count prune (documented as
-        trading time travel for space). Dirs not in the manifest (the
-        published-but-uncommitted crash window) are never touched — the
-        re-driven batch reuses them."""
-        import shutil
-
-        root = self.changes_dir
-        if not os.path.isdir(root):
-            return 0
-        dirs = [
-            d
-            for d in os.listdir(root)
-            if d.startswith("batch=") and not d.endswith(".staging")
-        ]
-        if len(dirs) <= retention:
-            return 0
-        cps = self._feed_checkpoints()
-        ids = [e["batch_id"] for e in self._merge_entries()]
-        pos = {bid: i for i, bid in enumerate(ids)}
-        if not cps:
-            return self._prune_batch_dirs(root, retention)
-        newest_cp = max(
-            (pos[b] for b in cps if b in pos), default=None
-        )
-        if newest_cp is None:
-            return self._prune_batch_dirs(root, retention)
-        removable = sorted(
-            (
-                d
-                for d in dirs
-                if pos.get(d.split("=", 1)[1], newest_cp + 1) <= newest_cp
-            ),
-            key=lambda d: pos[d.split("=", 1)[1]],
-        )
-        removed = 0
-        for d in removable[: len(dirs) - retention]:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-            removed += 1
-        return removed
-
-    @staticmethod
-    def _prune_batch_dirs(root: str, retention: int) -> int:
-        """Drop all but the newest ``retention`` ``batch=*`` dirs under
-        ``root`` (ordered by commit time — batch ids are opaque here)."""
-        import os
-        import shutil
-
-        if not os.path.isdir(root):
-            return 0
-        dirs = [
-            os.path.join(root, d)
-            for d in os.listdir(root)
-            if d.startswith("batch=") and not d.endswith(".staging")
-        ]
-        dirs.sort(key=os.path.getmtime)
-        removed = 0
-        for d in dirs[: max(0, len(dirs) - retention)]:
-            shutil.rmtree(d, ignore_errors=True)
-            removed += 1
-        return removed
+        return prune_oldest(os.path.join(index.path, "pairs"), retention)
 
     # ------------------------------------------------------------------
 
@@ -710,6 +630,19 @@ class CdcEngine:
     def final_state(self) -> DataFrame:
         return self.state.read()
 
+    @property
+    def feed(self) -> ChangeFeed:
+        """The engine's CDC-out change feed (:mod:`.operators.feed`),
+        following ``changes_dir`` (a feed may be enabled mid-life)."""
+        if not self.changes_dir:
+            raise ValueError(
+                "engine was built without changes_dir; pass changes_dir= "
+                "to CdcEngine to record a change feed"
+            )
+        if self._feed is None or self._feed.root != self.changes_dir:
+            self._feed = ChangeFeed(self.spark, self.changes_dir, self.manifest)
+        return self._feed
+
     def change_feed(self) -> DataFrame:
         """The accumulated CDC-out feed — one row per net state change,
         partitioned by the batch that produced it (``batch`` column =
@@ -718,55 +651,7 @@ class CdcEngine:
         ``change_type``/``prev_lsn`` say what happened to the key. Only
         published dirs are read (a torn ``.staging`` is invisible), so
         the feed is always a prefix-consistent view of committed work."""
-        if not self.changes_dir:
-            raise ValueError(
-                "engine was built without changes_dir; pass changes_dir= "
-                "to CdcEngine to record a change feed"
-            )
-        dirs = (
-            [
-                os.path.join(self.changes_dir, d)
-                for d in sorted(os.listdir(self.changes_dir))
-                if d.startswith("batch=") and not d.endswith(".staging")
-            ]
-            if os.path.isdir(self.changes_dir)
-            else []
-        )
-        if not dirs:
-            raise ValueError(
-                f"no published change-feed batches under {self.changes_dir}"
-            )
-        # mergeSchema: add-column evolution mid-history leaves older
-        # batch dirs without the new columns — merge the footers so the
-        # feed presents ONE evolved schema (old rows NULL-filled, same
-        # contract as the state table itself). Cost is a footer read per
-        # file over the (small, net-changes-only) feed, not a data scan.
-        return (
-            self.spark.read.option("basePath", self.changes_dir)
-            .option("mergeSchema", "true")
-            .parquet(*dirs)
-        )
-
-    def _merge_entries(self) -> list[dict]:
-        """Manifest entries that mutated row content, in commit order —
-        merge entries carry a ``mode`` metric; maintenance / rebucket /
-        checkpoint entries don't and are skipped."""
-        return [e for e in self.manifest.entries() if "mode" in e]
-
-    def _feed_checkpoints(self) -> dict[str, str]:
-        """Published snapshot checkpoints inside the change feed:
-        ``{batch_id: dir}`` for every ``checkpoint=<batch_id>`` dir
-        under ``changes_dir``. Discovery is filesystem-only (the atomic
-        publish rename is the commit point — a torn ``.staging`` is
-        invisible), so a crash between publish and the advisory
-        manifest entry loses nothing."""
-        if not (self.changes_dir and os.path.isdir(self.changes_dir)):
-            return {}
-        return {
-            d.split("=", 1)[1]: os.path.join(self.changes_dir, d)
-            for d in os.listdir(self.changes_dir)
-            if d.startswith("checkpoint=") and not d.endswith(".staging")
-        }
+        return self.feed.read()
 
     def checkpoint_feed(self, batch_id: str | None = None) -> dict:
         """Materialize a snapshot checkpoint into the change feed (the
@@ -792,103 +677,7 @@ class CdcEngine:
         Idempotent (an existing published dir is reused) and crash-safe
         (stage → atomic rename; the advisory manifest entry commits
         after, and discovery never depends on it)."""
-        import json
-        import shutil
-
-        if not self.changes_dir:
-            raise ValueError(
-                "engine was built without changes_dir; checkpoints live "
-                "inside the change feed"
-            )
-        entries = self._merge_entries()
-        if not entries:
-            raise ValueError("no applied batches to checkpoint")
-        ids = [e["batch_id"] for e in entries]
-        if batch_id is None:
-            batch_id = ids[-1]
-        if batch_id not in ids:
-            raise ValueError(f"batch {batch_id!r} not in the manifest")
-        out_dir = os.path.join(self.changes_dir, f"checkpoint={batch_id}")
-        meta_path = os.path.join(out_dir, StateTable.FEED_META)
-        if os.path.isdir(out_dir):
-            rows = None
-            try:
-                with open(meta_path, encoding="utf-8") as f:
-                    rows = int(json.load(f)["rows"])
-            except (OSError, ValueError, KeyError):
-                pass
-            return {"checkpoint_of": batch_id, "rows": rows, "reused": True}
-
-        if batch_id == ids[-1]:
-            # newest batch: the live state IS the snapshot — one state
-            # scan, no feed fold (and no feed-coverage requirement,
-            # which is what lets a late-enabled feed bootstrap). Guard
-            # the one crash window where the live state is AHEAD of the
-            # manifest (batch merged, manifest commit never landed):
-            # the feed publishes BEFORE the state mutates, so that
-            # window always leaves a published-but-uncommitted batch
-            # dir — refuse rather than label a snapshot containing the
-            # uncommitted batch's rows with the prior batch's id.
-            committed = set(ids)
-            stray = sorted(
-                d.split("=", 1)[1]
-                for d in (
-                    os.listdir(self.changes_dir)
-                    if os.path.isdir(self.changes_dir)
-                    else []  # late-enabled feed: nothing published yet
-                )
-                if d.startswith("batch=")
-                and not d.endswith(".staging")
-                and d.split("=", 1)[1] not in committed
-            )
-            if stray:
-                raise ValueError(
-                    f"feed dirs {stray} are published but not manifest-"
-                    "committed — the live state may already contain "
-                    "their mutations (merge-then-crash window); re-drive "
-                    "replay to commit them, then checkpoint"
-                )
-            snap = self.state.read()
-        else:
-            snap = self.state_as_of(batch_id)
-        drop = [
-            c
-            for c in ("bucket", "content_sha256", self.state.op_col)
-            if c in snap.columns
-        ]
-        snap = snap.drop(*drop)
-
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        snap = snap.observe(obs, F.count(F.lit(1)).alias("rows"))
-        staging = f"{out_dir}.staging"
-        if os.path.isdir(staging):
-            shutil.rmtree(staging)
-        snap.write.mode("overwrite").parquet(staging)
-        try:
-            rows = int(obs.get["rows"])
-        except Exception:  # noqa: BLE001 — AQE may prune the metrics node
-            from .operators.store import parquet_footer_rows
-
-            rows = parquet_footer_rows(staging)
-        with open(
-            os.path.join(staging, StateTable.FEED_META), "w", encoding="utf-8"
-        ) as f:
-            json.dump({"rows": rows, "checkpoint_of": batch_id}, f)
-        os.rename(staging, out_dir)  # atomic publish
-        hw = self.manifest.high_watermark()
-        self.manifest.commit(
-            {
-                "batch_id": f"feed_checkpoint_{self.manifest.count()}",
-                "lsn_lo": hw,
-                "lsn_hi": hw,
-                "schema_version": self.registry.version,
-                "checkpoint_of": batch_id,
-                "checkpoint_rows": rows,
-            }
-        )
-        return {"checkpoint_of": batch_id, "rows": rows, "reused": False}
+        return self.feed.checkpoint(self.state, self.registry.version, batch_id)
 
     def state_as_of(self, batch_id: str) -> DataFrame:
         """Time travel (the Iceberg snapshot-read / Delta ``VERSION AS
@@ -915,89 +704,7 @@ class CdcEngine:
         point up to ``batch_id``: batches predating the feed or pruned
         by retention raise ``ValueError`` (never a silent partial
         reconstruction) unless a checkpoint covers them."""
-        if not self.changes_dir:
-            raise ValueError(
-                "engine was built without changes_dir; time travel folds "
-                "the change feed"
-            )
-        entries = self._merge_entries()
-        ids = [e["batch_id"] for e in entries]
-        try:
-            target = ids.index(batch_id)
-        except ValueError:
-            raise ValueError(f"batch {batch_id!r} not in the manifest")
-        cps = self._feed_checkpoints()
-        cp_dir = None
-        start = 0
-        for i in range(target, -1, -1):
-            if ids[i] in cps:
-                cp_dir = cps[ids[i]]
-                start = i + 1
-                break
-        dirs: list[str] = []
-        for e in entries[start : target + 1]:
-            if "change_rows" not in e:
-                raise ValueError(
-                    f"batch {e['batch_id']!r} predates the change feed; "
-                    "state_as_of needs changes_dir set for the whole "
-                    "history (or a covering checkpoint_feed snapshot)"
-                )
-            d = os.path.join(self.changes_dir, f"batch={e['batch_id']}")
-            if not os.path.isdir(d):
-                raise ValueError(
-                    f"change-feed dir for batch {e['batch_id']!r} was "
-                    "pruned (changes_retention_batches); snapshot "
-                    "unavailable (create a checkpoint_feed before "
-                    "pruning to keep later batches reconstructible)"
-                )
-            dirs.append(d)
-        from .operators.dedup import OP_DELETE, OP_UPSERT, last_writer_wins_agg
-
-        op_col = self.state.op_col
-        parts: list[DataFrame] = []
-        if cp_dir is not None:
-            parts.append(
-                self.spark.read.parquet(cp_dir).withColumn(
-                    op_col, F.lit(OP_UPSERT)
-                )
-            )
-        if dirs:
-            feed = (
-                self.spark.read.option("basePath", self.changes_dir)
-                .option("mergeSchema", "true")
-                .parquet(*dirs)
-                .drop("batch", f"prev_{self.state.lsn_col}")
-            )
-            parts.append(
-                # preimage rows (feed_preimages=True) restate REPLACED
-                # rows at their old lsn — LWW-transparent, but drop them
-                # so the fold input stays O(net changes)
-                feed.filter(~F.col("change_type").endswith("_preimage"))
-                .withColumn(
-                    op_col,
-                    F.when(
-                        F.col("change_type") == "delete", OP_DELETE
-                    ).otherwise(OP_UPSERT),
-                )
-                .drop("change_type")
-            )
-        merged = parts[0]
-        if len(parts) == 2:
-            # allowMissingColumns: columns added after the checkpoint
-            # (or between feed vintages) NULL-fill, the state table's
-            # own evolution contract
-            merged = parts[0].unionByName(parts[1], allowMissingColumns=True)
-        folded = last_writer_wins_agg(
-            merged, self.state.keys, self.state.lsn_col, op_col
-        )
-        out = folded.filter(F.col(op_col) != OP_DELETE).drop(op_col)
-        # match final_state()'s schema contract: the per-row content
-        # digest is a pure function of content, so recompute it instead
-        # of shipping it through the feed
-        return out.withColumn(
-            "content_sha256",
-            F.sha2(F.col(self.state.content_col).cast("string"), 256),
-        )
+        return self.feed.state_as_of(self.state, batch_id)
 
     def verify_against(self, expected: DataFrame, content_col: str = "content") -> dict:
         """Per-row sha256(content) differential vs an independently

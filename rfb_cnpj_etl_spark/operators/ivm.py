@@ -48,10 +48,11 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import Manifest
+from .store import _heal_swap, _swap_in
 
 #: change_type values that contribute to the aggregate, with sign.
 _SIGNS = {
@@ -100,7 +101,7 @@ class IncrementalAggregate:
         if clash:
             raise ValueError(f"measure/group name collision: {sorted(clash)}")
         os.makedirs(self.path, exist_ok=True)
-        self._recover()
+        _heal_swap(self.agg_dir)
         stored = self._meta()
         if stored is not None:
             spec = {"group_cols": self.group_cols, "sums": self.sums}
@@ -116,13 +117,6 @@ class IncrementalAggregate:
     @property
     def agg_dir(self) -> str:
         return os.path.join(self.path, "agg")
-
-    def _recover(self) -> None:
-        """Heal the one crash window of the rename-aside swap: live dir
-        renamed aside but the staged replacement not yet renamed in."""
-        old = f"{self.agg_dir}.old"
-        if not os.path.isdir(self.agg_dir) and os.path.isdir(old):
-            os.replace(old, self.agg_dir)
 
     def _meta(self) -> dict | None:
         try:
@@ -214,7 +208,7 @@ class IncrementalAggregate:
 
     def read(self) -> DataFrame:
         """The maintained aggregate: ``group_cols + n + <sums>``."""
-        self._recover()
+        _heal_swap(self.agg_dir)
         if not self.exists():
             raise ValueError(
                 f"aggregate at {self.path} has never been refreshed"
@@ -265,7 +259,6 @@ class IncrementalAggregate:
         self,
         feed: DataFrame,
         batch_ids: list[str],
-        guard: bool = True,
         fold_ids: list[str] | None = None,
     ) -> dict:
         """Fold the given feed rows (exactly the batches named in
@@ -276,7 +269,7 @@ class IncrementalAggregate:
         The preimage-pairing guard rides the SAME job as the fold
         (observed metrics on the feed scan — zero extra passes); a
         violation discards the staged result before the swap, so a
-        guarded refresh never commits from a preimage-less feed.
+        refresh never commits from a preimage-less feed.
 
         Direct calls keep their batch ids exact (``fold_ids=None`` —
         folding an unverified id would mark earlier unapplied batches
@@ -284,10 +277,11 @@ class IncrementalAggregate:
         the applied record by one id per call; the next
         :meth:`advance` that applies new batches re-bounds it by folding
         every manifest-verified id into the watermarks (an advance with
-        nothing pending returns early and leaves the record as is). ``fold_ids`` is advance/seed's verified
-        committed set (see :meth:`_merge_applied`).
+        nothing pending returns early and leaves the record as is).
+        ``fold_ids`` is advance/seed's verified committed set (see
+        :meth:`_merge_applied`).
         """
-        self._recover()
+        _heal_swap(self.agg_dir)
         meta = self._meta()
         todo = [b for b in batch_ids if not self._is_applied_in(meta, b)]
         if not todo:
@@ -298,21 +292,12 @@ class IncrementalAggregate:
                 f"{sorted(set(batch_ids) - set(todo))} already applied — "
                 "pass only unapplied batches (advance() does this)"
             )
-        obs = None
-        if guard:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            kinds = ("update", "update_preimage", "delete", "delete_preimage")
-            feed = feed.observe(
-                obs,
-                *[
-                    F.count(
-                        F.when(F.col("change_type") == k, 1)
-                    ).alias(k)
-                    for k in kinds
-                ],
-            )
+        obs = Observation()
+        kinds = ("update", "update_preimage", "delete", "delete_preimage")
+        feed = feed.observe(
+            obs,
+            *[F.count(F.when(F.col("change_type") == k, 1)).alias(k) for k in kinds],
+        )
         delta = self._contributions(feed)
         if self.exists():
             merged = (
@@ -340,21 +325,20 @@ class IncrementalAggregate:
         if os.path.isdir(staging):
             shutil.rmtree(staging)
         merged.write.mode("overwrite").parquet(staging)
-        if obs is not None:
-            try:
-                counts = dict(obs.get)
-            except Exception:  # noqa: BLE001 — AQE may prune the node
-                counts = {
-                    r["change_type"]: r["cnt"]
-                    for r in feed.groupBy("change_type")
-                    .agg(F.count(F.lit(1)).alias("cnt"))
-                    .collect()
-                }
-            try:
-                self._check_preimage_counts(counts)
-            except ValueError:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise
+        try:
+            counts = dict(obs.get)
+        except Exception:  # noqa: BLE001 — AQE may prune the node
+            counts = {
+                r["change_type"]: r["cnt"]
+                for r in feed.groupBy("change_type")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .collect()
+            }
+        try:
+            self._check_preimage_counts(counts)
+        except ValueError:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
         with open(os.path.join(staging, self.META), "w", encoding="utf-8") as f:
             json.dump(
                 {
@@ -363,19 +347,8 @@ class IncrementalAggregate:
                 },
                 f,
             )
-        self._swap_in(staging)
+        _swap_in(staging, self.agg_dir)
         return {"applied": len(todo), "batch_ids": todo}
-
-    def _swap_in(self, staging: str) -> None:
-        """store.py's rename-aside idiom: never a window with neither
-        dir, trash removed last; ``_recover`` heals the mid-swap crash."""
-        trash = f"{self.agg_dir}.old"
-        if os.path.isdir(trash):
-            shutil.rmtree(trash)
-        if os.path.isdir(self.agg_dir):
-            os.replace(self.agg_dir, trash)
-        os.replace(staging, self.agg_dir)
-        shutil.rmtree(trash, ignore_errors=True)
 
     def seed(self, engine) -> dict:
         """Bootstrap (or rebuild) from a full recompute over the CURRENT
@@ -384,8 +357,7 @@ class IncrementalAggregate:
         pruned batches this aggregate never applied). Marks every
         manifest-committed feed batch as applied, so the next
         :meth:`advance` continues incrementally from here."""
-        if not engine.changes_dir:
-            raise ValueError("engine has no changes_dir (no feed to tail)")
+        feed = engine.feed
         full = self._contributions(
             engine.final_state().withColumn("change_type", F.lit("insert"))
         )
@@ -394,11 +366,7 @@ class IncrementalAggregate:
         # (feed-publish-then-crash window) is NOT in the state yet — it
         # stays unapplied so the next advance folds it after the engine
         # re-drives the batch.
-        seen = sorted(
-            e["batch_id"]
-            for e in engine._merge_entries()
-            if "change_rows" in e
-        )
+        seen = feed.committed_batches()
         staging = f"{self.agg_dir}.staging"
         if os.path.isdir(staging):
             shutil.rmtree(staging)
@@ -411,20 +379,8 @@ class IncrementalAggregate:
                 },
                 f,
             )
-        self._swap_in(staging)
+        _swap_in(staging, self.agg_dir)
         return {"seeded": True, "batches_marked": len(seen)}
-
-    @staticmethod
-    def _feed_dirs(engine) -> dict[str, str]:
-        return (
-            {
-                d.split("=", 1)[1]: os.path.join(engine.changes_dir, d)
-                for d in os.listdir(engine.changes_dir)
-                if d.startswith("batch=") and not d.endswith(".staging")
-            }
-            if os.path.isdir(engine.changes_dir)
-            else {}
-        )
 
     def advance(self, engine) -> dict:
         """Catch up with every manifest-COMMITTED, unapplied feed batch
@@ -442,20 +398,15 @@ class IncrementalAggregate:
         be reconstructed — refresh would silently diverge. Recover
         with :meth:`seed` (one O(state) rebuild), then keep retention
         behind the aggregate (advance before ``maintain`` prunes)."""
-        if not engine.changes_dir:
-            raise ValueError("engine has no changes_dir (no feed to tail)")
+        feed = engine.feed
         # heal a mid-swap crash BEFORE reading the meta: a missing agg
         # dir with an intact .old would otherwise read as "nothing
         # applied" and turn long-applied-but-retention-pruned batches
         # into a spurious 'pruned' error (or refresh's all-or-nothing
         # guard) on a same-instance retry
-        self._recover()
-        dirs = self._feed_dirs(engine)
-        committed = [
-            e["batch_id"]
-            for e in engine._merge_entries()
-            if "change_rows" in e
-        ]
+        _heal_swap(self.agg_dir)
+        dirs = feed.batches()
+        committed = feed.committed_batches()
         meta = self._meta()
         pending = [b for b in committed if not self._is_applied_in(meta, b)]
         gone = [b for b in pending if b not in dirs]
@@ -469,17 +420,13 @@ class IncrementalAggregate:
         todo = sorted(pending)
         if not todo:
             return {"applied": 0}
-        feed = (
-            self.spark.read.option("basePath", engine.changes_dir)
-            # add-column evolution mid-history: older dirs NULL-fill
-            .option("mergeSchema", "true")
-            .parquet(*[dirs[b] for b in todo])
-        )
         # fold set = EVERY committed id (not just todo): after this
         # refresh all of them are applied, and folding the already-
         # applied exact ones (e.g. a batch a direct refresh applied
         # out of order earlier) is what re-bounds the record
-        return self.refresh(feed, todo, fold_ids=committed)
+        return self.refresh(
+            feed.read([dirs[b] for b in todo]), todo, fold_ids=committed
+        )
 
     def verify_against_state(self, engine, content_ok: bool = True) -> dict:
         """Differential vs a from-scratch aggregate of the CURRENT

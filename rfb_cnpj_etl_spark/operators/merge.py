@@ -33,7 +33,6 @@ reinventing it.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -42,8 +41,7 @@ from pyspark.sql import functions as F
 
 from ..schema import CODE_KEY, OP_DELETE, OP_UPSERT
 from .dedup import last_writer_wins_agg
-
-
+from .feed import publish, published, unpublish
 from .store import (  # noqa: F401  (re-exported for compatibility)
     BucketedParquetStore,
     TouchedSetMismatchError,
@@ -51,6 +49,7 @@ from .store import (  # noqa: F401  (re-exported for compatibility)
     parquet_footer_rows,
     path_health,
 )
+
 
 class StateTable(BucketedParquetStore):
     """A bucket-partitioned parquet table with MERGE apply.
@@ -259,16 +258,12 @@ class StateTable(BucketedParquetStore):
             if changes_out is not None and not feed_metrics.get(
                 "change_feed_reused"
             ):
-                shutil.rmtree(changes_out, ignore_errors=True)
+                unpublish(changes_out)
             raise
         res.update(feed_metrics)
         return res
 
     # -- CDC-out change feed ---------------------------------------------
-
-    #: sidecar recording the feed's row count inside each published
-    #: batch dir (underscore prefix → ignored by parquet readers).
-    FEED_META = "_feed_meta.json"
 
     def _pre_image(
         self, touched: list[int], lsn_col: str
@@ -335,16 +330,9 @@ class StateTable(BucketedParquetStore):
         before-row outranked (lsn, delete-priority) → ``update`` /
         ``delete``; a stale winner the state outranks emits nothing.
         """
-        if os.path.isdir(out_dir):
-            rows = None
-            try:
-                with open(
-                    os.path.join(out_dir, self.FEED_META), encoding="utf-8"
-                ) as f:
-                    rows = int(json.load(f)["rows"])
-            except (OSError, ValueError, KeyError):
-                pass
-            return {"change_rows": rows, "change_feed_reused": True}
+        pub = published(out_dir)
+        if pub is not None:
+            return {"change_rows": pub["rows"], "change_feed_reused": True}
 
         winners = last_writer_wins_agg(incoming, self.keys, lsn_col, op_col)
         prev_col = f"prev_{lsn_col}"
@@ -454,33 +442,9 @@ class StateTable(BucketedParquetStore):
             )
             feed = feed.unionByName(pre_rows, allowMissingColumns=True)
 
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        feed = feed.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # dot-prefixed staging name: a torn staging dir must be invisible
-        # to every feed consumer — change_feed()'s ``batch=`` listing and
-        # the streaming tail's ``batch=*`` glob both skip hidden dirs,
-        # so only the atomic rename below ever exposes feed data.
-        parent, base = os.path.split(out_dir)
-        staging = os.path.join(parent, f".{base}.staging")
-        # clean a torn dir under the new hidden name AND the legacy
-        # visible one (pre-hidden-staging crashes left `batch=<id>.staging`)
-        for torn in (staging, f"{out_dir}.staging"):
-            if os.path.isdir(torn):
-                shutil.rmtree(torn)
-        feed.write.mode("overwrite").parquet(staging)
-        try:
-            rows = int(obs.get["rows"])
-        except Exception:  # noqa: BLE001 — AQE may prune the metrics node
-            rows = parquet_footer_rows(staging)
-        with open(
-            os.path.join(staging, self.FEED_META), "w", encoding="utf-8"
-        ) as f:
-            json.dump({"rows": rows}, f)
-        os.makedirs(os.path.dirname(out_dir) or ".", exist_ok=True)
-        os.rename(staging, out_dir)  # atomic publish = the feed commit
-        return {"change_rows": rows}
+        # the shared feed publish: hidden staging → atomic rename (the
+        # feed commit), so no consumer ever reads a torn write
+        return {"change_rows": publish(feed, out_dir)}
 
     # -- rows for the shared write path ----------------------------------
 

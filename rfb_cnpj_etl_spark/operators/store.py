@@ -94,6 +94,32 @@ def _bucket_ids(root: str) -> list[int]:
     )
 
 
+def _swap_in(src: str, dst: str) -> None:
+    """Replace ``dst`` with ``src`` without a window where neither
+    exists: dst is renamed aside first (never rmtree'd before the
+    replacement lands) and the trash only deleted last; a crash in
+    between is healed by :func:`_heal_swap`. ``src`` absent = the bucket
+    emptied out (every key deleted)."""
+    trash = f"{dst}.old"
+    if os.path.isdir(trash):
+        shutil.rmtree(trash)
+    if os.path.isdir(dst):
+        os.replace(dst, trash)
+    if os.path.isdir(src):
+        os.replace(src, dst)
+    shutil.rmtree(trash, ignore_errors=True)
+
+
+def _heal_swap(dst: str) -> None:
+    """Undo a crashed :func:`_swap_in`: restore ``dst`` from its
+    renamed-aside copy when the replacement never landed, else drop the
+    stale copy (the swap completed)."""
+    trash = f"{dst}.old"
+    if not os.path.isdir(dst) and os.path.isdir(trash):
+        os.replace(trash, dst)
+    shutil.rmtree(trash, ignore_errors=True)
+
+
 class TouchedSetMismatchError(RuntimeError):
     """A staged write holds rows in buckets outside the precomputed
     touched set (the probe and the write saw differently-normalized
@@ -195,7 +221,7 @@ class BucketedParquetStore:
         self.bucket_keys = bucket_keys
         # the whole-dir restore must run before the marker can be read
         # (a crashed rebucket may have left the table only in `.old`)
-        self._restore_whole_old()
+        _heal_swap(self.path)
         stored = self._read_marker()
         # protocol + live-file map: the marker — swapped atomically WITH
         # the data — is the ground truth; the ctor arg is a fresh-store
@@ -305,15 +331,6 @@ class BucketedParquetStore:
             json.dump(payload, f)
         os.replace(tmp, meta)
 
-    def _restore_whole_old(self) -> None:
-        """Restore a crashed rebucket's intact pre-swap table: the
-        ``{path}.old`` directory exists only between the rebucket's two
-        renames (staging is discarded on rerun)."""
-        whole_old = f"{self.path}.old"
-        if not os.path.isdir(self.path) and os.path.isdir(whole_old):
-            os.replace(whole_old, self.path)
-        shutil.rmtree(whole_old, ignore_errors=True)
-
     def _recover(self) -> None:
         """Undo a crashed swap. Invariants of the swap protocols below:
         a ``*.old`` directory exists ONLY before the corresponding
@@ -324,12 +341,7 @@ class BucketedParquetStore:
         if os.path.isdir(self.path):
             for d in os.listdir(self.path):
                 if d.startswith("bucket=") and d.endswith(".old"):
-                    src = os.path.join(self.path, d)
-                    dst = os.path.join(self.path, d[: -len(".old")])
-                    if os.path.isdir(dst):
-                        shutil.rmtree(src)  # swap completed; stale trash
-                    else:
-                        os.replace(src, dst)  # swap crashed mid-bucket
+                    _heal_swap(os.path.join(self.path, d[: -len(".old")]))
         if self.commit_protocol == "pointer":
             if not self._marker_present and any(
                 d.startswith("bucket=")
@@ -385,20 +397,6 @@ class BucketedParquetStore:
                 os.remove(os.path.join(bdir, e))
             if not keep:
                 shutil.rmtree(bdir, ignore_errors=True)
-
-    def _swap_in(self, src: str, dst: str) -> None:
-        """Replace ``dst`` with ``src`` without a window where neither
-        exists: dst is renamed aside first (never rmtree'd before the
-        replacement lands) and the trash only deleted last. ``src``
-        absent = the bucket emptied out (every key deleted)."""
-        trash = f"{dst}.old"
-        if os.path.isdir(trash):
-            shutil.rmtree(trash)
-        if os.path.isdir(dst):
-            os.replace(dst, trash)
-        if os.path.isdir(src):
-            os.replace(src, dst)
-        shutil.rmtree(trash, ignore_errors=True)
 
     # -- read ----------------------------------------------------------
 
@@ -731,7 +729,7 @@ class BucketedParquetStore:
             for b in touched:
                 src = f"{staging}/bucket={b}"
                 if os.path.isdir(src) or b not in staged_set:
-                    self._swap_in(src, f"{self.path}/bucket={b}")
+                    _swap_in(src, f"{self.path}/bucket={b}")
             self._write_meta()
             shutil.rmtree(staging, ignore_errors=True)
             return
@@ -928,22 +926,17 @@ class BucketedParquetStore:
         self._write_meta(into=staging, buckets=new_buckets, fresh_layout=True)
         # Whole-table rename-aside swap. Crash between the two renames
         # leaves the intact pre-rebucket table in {path}.old, which
-        # _recover() restores on the next construction — the rebucket is
+        # _heal_swap restores on the next construction — the rebucket is
         # then simply re-run. Crash after the swap but before the
         # caller's manifest commit is detected by the layout marker
         # (already inside the swapped dir): the marker, not the
         # manifest, is the layout's ground truth.
-        old = f"{self.path}.old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        os.replace(self.path, old)
-        os.replace(staging, self.path)
+        _swap_in(staging, self.path)
         self.buckets = new_buckets
         # reseed: a bucket absent from the full rewrite is KNOWN-empty —
         # record the 0 (a missing entry reads as "untracked")
         self._row_est = {b: bucket_rows.get(b, 0) for b in range(new_buckets)}
         self._write_meta()
-        shutil.rmtree(old, ignore_errors=True)
         # deltas were folded into the new base by the read() above; the
         # crash window between the swap and this clear is covered by the
         # delta layout marker check in _recover().

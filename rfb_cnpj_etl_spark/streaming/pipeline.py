@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..engine import CdcEngine
+from ..operators.feed import ChangeFeed
 from ..schema import CHANGELOG_SCHEMA, CODE_KEY
 
 
@@ -170,70 +171,27 @@ def change_feed_stream(
     changes_dir: str,
     schema=None,
     max_files_per_trigger: int = 8,
-    as_changelog: bool = True,
 ) -> DataFrame:
     """The CDC-out change feed as a Structured Streaming SOURCE — the
     piece that makes pipeline chaining continuous: stage N publishes
     per-batch feed dirs (``changes_dir/batch=<id>/``, atomic rename),
-    stage N+1 tails them with a ``batch=*`` glob file stream. Because
-    each dir appears atomically and parquet part files are immutable,
-    the file source's discovery is torn-read-free by construction; the
-    ``_feed_meta.json`` sidecar is underscore-prefixed and ignored.
+    stage N+1 tails them with a ``batch=*`` glob file stream
+    (:meth:`ChangeFeed.stream`; opening the feed sweeps legacy visible
+    staging the glob would otherwise match).
 
-    ``as_changelog=True`` maps the feed back to the engine's changelog
-    contract (``change_type`` → ``op``: delete stays delete, insert /
-    update become upsert; ``prev_lsn`` dropped) so the stream feeds
-    straight into ``StreamingCdcPipeline``/``CdcEngine.replay`` —
-    ordering is irrelevant to correctness because the LWW fold is
-    order-free by lsn. ``as_changelog=False`` yields raw feed rows.
+    Rows come mapped back to the engine's changelog contract
+    (:func:`~rfb_cnpj_etl_spark.operators.feed.to_changelog`:
+    ``change_type`` → ``op``, preimages and ``prev_lsn`` dropped) so the
+    stream feeds straight into ``StreamingCdcPipeline``/``CdcEngine.
+    replay`` — ordering is irrelevant to correctness because the LWW
+    fold is order-free by lsn.
 
     ``schema``: Structured Streaming needs a fixed schema up front; by
     default it is inferred ONCE from the already-published dirs (a
     footer-only batch read). Pass it explicitly to start a tail before
     the first batch is published, or to pin a pre-evolution schema.
     """
-    import os
-
-    if schema is None:
-        dirs = (
-            [
-                os.path.join(changes_dir, d)
-                for d in sorted(os.listdir(changes_dir))
-                if d.startswith("batch=") and not d.endswith(".staging")
-            ]
-            if os.path.isdir(changes_dir)
-            else []
-        )
-        if not dirs:
-            raise ValueError(
-                f"no published change-feed batches under {changes_dir}; "
-                "pass schema= to tail a feed that has not produced yet"
-            )
-        schema = (
-            spark.read.option("mergeSchema", "true").parquet(*dirs).schema
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        # new batch dirs must keep being discovered after the first
-        # epoch: the glob is part of the path, not a one-shot listing
-        .parquet(os.path.join(changes_dir, "batch=*"))
-    )
-    if not as_changelog:
-        return stream
-    return (
-        # preimage rows (upstream feed_preimages=True) restate replaced
-        # rows at their old lsn — LWW-transparent downstream, but not
-        # changelog events; drop them from the changelog view
-        stream.filter(~F.col("change_type").endswith("_preimage"))
-        .withColumn(
-            "op",
-            F.when(F.col("change_type") == "delete", "delete").otherwise(
-                "upsert"
-            ),
-        )
-        .drop("change_type", "prev_lsn")
-    )
+    return ChangeFeed(spark, changes_dir).stream(schema, max_files_per_trigger)
 
 
 def streaming_dedup_events(

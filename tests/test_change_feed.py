@@ -182,8 +182,11 @@ class TestChangeFeedExactlyOnce:
         self, spark, tmp_path
     ):
         """A torn staging dir (crash mid feed write) must never be read
-        as published data — fresh staging is dot-hidden, and consumers
-        defensively skip the legacy `batch=<id>.staging` name too."""
+        as published data — fresh staging is dot-hidden, consumers
+        skip the legacy `batch=<id>.staging` name too, and the stream
+        sweeps it before its `batch=*` glob could match it (planted
+        here holding a VALID parquet row, which a glob read would
+        surface)."""
         eng = CdcEngine(
             spark,
             str(tmp_path / "state"),
@@ -192,19 +195,33 @@ class TestChangeFeedExactlyOnce:
             changes_dir=str(tmp_path / "changes"),
         )
         eng.replay(log_df(spark, [row("r1", "a", "v1", 1)]), batch_size=10)
-        for torn in ("batch=zz.staging", ".batch=zz.staging"):
-            d = os.path.join(eng.changes_dir, torn)
-            os.makedirs(d)
-            with open(os.path.join(d, "part-0.parquet"), "w") as f:
-                f.write("torn write")
+        legacy = os.path.join(eng.changes_dir, "batch=zz.staging")
+        eng.change_feed().drop("batch").limit(1).withColumn(
+            "path", F.lit("torn")
+        ).write.parquet(legacy)
+        hidden = os.path.join(eng.changes_dir, ".batch=zz.staging")
+        os.makedirs(hidden)
+        with open(os.path.join(hidden, "part-0.parquet"), "w") as f:
+            f.write("torn write")
         # consumers: batch listing, streaming schema inference, pruning
         assert feed_tuples(eng.change_feed()) == [
             ("r1", "a", "insert", 1, None)
         ]
         from rfb_cnpj_etl_spark.streaming.pipeline import change_feed_stream
 
-        assert change_feed_stream(spark, eng.changes_dir) is not None
-        assert eng._prune_change_feed(retention=5) == 0
+        q = (
+            change_feed_stream(spark, eng.changes_dir)
+            .writeStream.format("memory")
+            .queryName("torn_tail")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        got = spark.sql("select path from torn_tail").collect()
+        assert [r["path"] for r in got] == ["a"]  # the torn row is absent
+        assert not os.path.isdir(legacy)  # swept when the stream opened
+        assert eng.feed.prune(retention=5) == 0
 
     def test_wrong_touched_set_unpublishes_its_feed(self, spark, tmp_path):
         """The touched-set guard fires AFTER the feed publish: the feed

@@ -206,11 +206,11 @@ class TestCheckpointFeed:
         os.makedirs(torn)
         with open(os.path.join(torn, "junk"), "w") as f:
             f.write("torn write")
-        assert eng._feed_checkpoints() == {}  # torn staging invisible
+        assert eng.feed.checkpoints() == {}  # torn staging invisible
         res = eng.checkpoint_feed(bid)
         assert res["reused"] is False and res["rows"] == 8
         assert not os.path.isdir(torn)  # staging consumed by the publish
-        assert bid in eng._feed_checkpoints()
+        assert bid in eng.feed.checkpoints()
 
     def test_newest_checkpoint_refuses_uncommitted_live_state(
         self, spark, tmp_path
@@ -237,7 +237,7 @@ class TestCheckpointFeed:
             eng2.checkpoint_feed()
         # explicit non-newest checkpoints fold committed feed dirs only
         # and stay correct in the window
-        committed = [e["batch_id"] for e in eng2._merge_entries()]
+        committed = [e["batch_id"] for e in eng2.feed.merge_entries()]
         assert eng2.checkpoint_feed(committed[0])["reused"] is False
         # re-driving replay recommits the batch; the fast path unblocks
         eng2.replay(three_window_log(spark), batch_size=10)
@@ -411,7 +411,7 @@ class TestCheckpointAwareRetention:
             batch_size=10,
         )
         eng.checkpoint_feed()
-        assert eng._prune_change_feed(8) == 0
+        assert eng.feed.prune(8) == 0
         assert any(
             d.startswith("batch=") for d in os.listdir(eng.changes_dir)
         )

@@ -543,14 +543,13 @@ class TestIncrementalAggregate:
         agg = IncrementalAggregate(
             spark, str(tmp_path / "ivm"), ["repo"], self.SUMS
         )
-        # zero-contribution feed (bare 'delete' rows carry no sign):
-        # only the id bookkeeping is under test
+        # empty feed (zero rows pass the preimage guard): only the id
+        # bookkeeping is under test
         noop = spark.createDataFrame(
-            [("r0", "x", "delete")],
-            "repo string, content string, change_type string",
+            [], "repo string, content string, change_type string"
         )
         oob = "lsn_900000_999999"
-        agg.refresh(noop, [oob], guard=False)
+        agg.refresh(noop, [oob])
         log = synthesize_changelog(spark, 600, n_repos=3, n_paths=15).cache()
         eng.replay(log, batch_size=200)
         agg.advance(eng)

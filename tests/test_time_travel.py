@@ -270,7 +270,7 @@ class TestStreamingChangeFeed:
 class TestFeedAsStreamSource:
     def test_feed_stream_drains_published_batches(self, spark, tmp_path):
         """change_feed_stream: the feed's batch=* dirs are a Structured
-        Streaming source; as_changelog maps change_type back to op."""
+        Streaming source; the stream maps change_type back to op."""
         from rfb_cnpj_etl_spark.streaming.pipeline import change_feed_stream
 
         log = spark.createDataFrame(
